@@ -14,8 +14,10 @@ shuffle), which is what scales."""
 
 from __future__ import annotations
 
+import glob
 import json
 import os
+import re
 import sys
 import time
 
@@ -23,6 +25,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from rpa_etl_spark import registry  # noqa: E402
 from rpa_etl_spark.session import get_spark  # noqa: E402
+from tools.bench_delta import compare  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -114,6 +117,9 @@ def main() -> None:
     docs = spread(spark.read.parquet(os.path.join(SF_DIR, "documents.parquet")))
     n_docs = docs.count()
     n_cores = spark.sparkContext.defaultParallelism
+    # N of the local[N] master get_spark resolved (SPARK_MASTER/_GRAFT_CPUS/nproc)
+    m = re.fullmatch(r"local\[(\d+)\]", spark.sparkContext.master)
+    cpus = int(m.group(1)) if m else n_cores
     pipe_sec = None
     # best-of-3 timed (was best-of-2): the round-13→14 bisect showed the
     # per-pass spread on identical code is ±20% (interleaved A/B runs
@@ -158,7 +164,7 @@ def main() -> None:
     # chars as `tail`, and parses the LAST line. The report is
     # best-effort: no exception in it may ever suppress the JSON contract.
     try:
-        _report_deltas(timings, medians, float(sf))
+        _report_deltas(timings, medians, (float(sf), cpus, n_cores))
     except Exception as e:  # noqa: BLE001
         print(f"[bench-delta] report failed: {e}", file=sys.stderr)
     sys.stderr.flush()
@@ -178,7 +184,7 @@ def main() -> None:
         "pipeline_sec": round(pipe_sec, 3),
         "pipeline_cores": n_cores,
         "docs_per_sec_per_core": docs_per_sec_per_core,
-        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+        "cpus": cpus,
         "default_parallelism": n_cores,
         "sentinel_cpu_scaling": sentinel_sec,
     }
@@ -241,43 +247,40 @@ def main() -> None:
 
 
 def _report_deltas(
-    timings: dict[str, float], medians: dict[str, float], sf: float
+    timings: dict[str, float],
+    medians: dict[str, float],
+    key: tuple[float, int, int],
+    paths: list[str] | None = None,
 ) -> None:
-    """Round-over-round per-query deltas vs the latest BENCH_r{N}.json, on
-    stderr (stdout stays the one-JSON-line driver contract). A swing
-    outside the noise band gets flagged so a 50× environment wobble (seen
+    """Round-over-round per-query deltas vs the newest prior record taken
+    at the same `key` = (sf, cpus, default_parallelism), on stderr (stdout
+    stays the one-JSON-line driver contract): a record from another core
+    count measures the cores, not the code. Movers are flagged by
+    tools/bench_delta.compare's rule, so a 50× environment wobble (seen
     round 2) is investigated in the round it appears. Medians are compared
     when the prior record carries them (round 7+); older records fall back
     to min-vs-min."""
-    import glob
-    import re as _re
-
     here = os.path.dirname(os.path.abspath(__file__))
     # Prefer the local full record (written by the previous bench run):
     # driver BENCH_r{N}.json tails truncate the per-query dicts, and from
     # round 8 on the driver-parsed record carries only the slowest-5.
-    prior_files = [os.path.join(here, "BENCH_LOCAL.json")] + list(
-        reversed(
-            sorted(
-                glob.glob(os.path.join(here, "BENCH_r*.json")),
-                key=lambda p: int(_re.search(r"r(\d+)", os.path.basename(p)).group(1)),
-            )
-        )
+    paths = paths or [os.path.join(here, "BENCH_LOCAL.json")] + sorted(
+        glob.glob(os.path.join(here, "BENCH_r*.json")),
+        key=lambda p: int(re.search(r"r(\d+)", os.path.basename(p)).group(1)),
+        reverse=True,
     )
     # walk back to the newest record that actually parsed — r03's driver
     # record was `parsed: null`, which must not silence deltas for every
     # later round
     prior, name, prior_is_median = {}, None, False
-    for path in prior_files:
+    for path in paths:
         try:
             with open(path) as f:
                 doc = json.load(f)
             # the driver's BENCH_r{N}.json wraps our JSON line under "parsed"
             parsed = doc.get("parsed") or doc
-            # deltas are only meaningful at the same scale factor — a local
-            # small-SF smoke run must not become the comparison base
-            rec_sf = parsed.get("sf", doc.get("sf"))
-            if rec_sf is not None and float(rec_sf) != sf:
+            fields = ("sf", "cpus", "default_parallelism")
+            if tuple(float(parsed.get(k, doc.get(k))) for k in fields) != key:
                 continue
             # derive the median flag from the dict actually adopted: an
             # empty/absent queries_median must not label a mins dict as
@@ -289,22 +292,18 @@ def _report_deltas(
                 prior, prior_is_median = parsed.get("queries", {}), False
             if not isinstance(prior, dict):  # round-8+ headline note strings
                 prior = {}
-        except (OSError, ValueError, AttributeError):
+        except (OSError, ValueError, AttributeError, TypeError):
             continue
         if prior:
             name = os.path.basename(path)
             break
     if not prior:
+        print(f"[bench-delta] no prior record at (sf, cpus, dp) = {key}", file=sys.stderr)
         return
     now_side = medians if prior_is_median else timings
-    flagged = []
-    for q, now in sorted(now_side.items()):
-        then = prior.get(q)
-        if then is None:
-            continue
-        # noise band: 2x ratio or 0.5 s absolute, whichever is larger
-        if abs(now - then) > max(0.5, min(now, then)):
-            flagged.append((q, then, now))
+    movers = compare(
+        {"queries": prior}, {"queries": now_side}, threshold=1.5, floor=0.5, allow=set()
+    )["regressions"]
     total_then = sum(v for v in prior.values() if isinstance(v, (int, float)))
     total_now = sum(now_side.values())
     kind = "median" if prior_is_median else "min"
@@ -329,13 +328,13 @@ def _report_deltas(
             f"{tbl_then_shared:.2f}s -> {tbl_now_shared:.2f}s ({ratio:.2f}x)",
             file=sys.stderr,
         )
-    for q, then, now in flagged:
+    for r in movers:
         print(
-            f"[bench-delta]   {q}: {then:.2f}s -> {now:.2f}s "
-            f"({now / max(then, 1e-9):.1f}x) — outside noise band, investigate",
+            f"[bench-delta]   {r['query']}: {r['old_sec']:.2f}s -> {r['new_sec']:.2f}s "
+            f"({r['ratio']:.1f}x) — outside noise band, investigate",
             file=sys.stderr,
         )
-    if not flagged:
+    if not movers:
         print("[bench-delta]   all queries within noise band", file=sys.stderr)
 
 

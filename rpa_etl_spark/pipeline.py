@@ -22,7 +22,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from rpa_etl_spark.functions import parsing as P
 from rpa_etl_spark.functions import scoring as S
 from rpa_etl_spark.functions import text as T
 from rpa_etl_spark.functions import validators as V
@@ -126,10 +125,11 @@ def process_documents(df: DataFrame, text_col: str = "text",
     df = df.withColumns(dict(post_norm))
 
     # PARSE (B1-B5) — the Arrow kernel (parsing_arrow), same choice as
-    # q_parse_invoice: the staged expression form (P.parse_invoices) is
-    # its machine-tested semantic twin (tests/test_parse_arrow.py) and
-    # the regex chain dominates the pipeline's cost — the kernel halves
-    # the full-chain wall time (measured 5.4s -> 2.5s at sf0.1)
+    # q_parse_invoice: the staged expression form
+    # (functions/parsing.parse_invoices) is its machine-tested semantic
+    # twin (tests/test_parse_arrow.py) and the regex chain dominates the
+    # pipeline's cost — the kernel halves the full-chain wall time
+    # (measured 5.4s -> 2.5s at sf0.1)
     from rpa_etl_spark.functions import parsing_arrow as PA
 
     df = PA.parse_invoices_arrow(df, text_col="normalized_text")

@@ -97,7 +97,7 @@ PRIORITY_ORDER = [
     "q_multimodal_mpeg_pframes",
     "q_multimodal_mpeg_bframes",
     "q_multimodal_decode",
-    # == tier B' (4): consumers of the gateway-scoped col_memo rework
+    # == tier B' (5): consumers of the gateway-scoped col_memo rework
     #    (functions/exprs.py + pipeline.py — ADVICE items) and of the
     #    salted_join hot-side broadcast hint (operators/skew.py — r14
     #    verdict #6); kernel-consumer rule pulls them in.

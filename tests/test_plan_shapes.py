@@ -6,18 +6,54 @@ column pruning) must survive refactors. Checked on the pre-AQE plan string
 from __future__ import annotations
 
 import re
+from contextlib import contextmanager
 
 import pytest
+from pyspark.sql import Window
+from pyspark.sql import functions as F
 
 from rpa_etl_spark import registry
+from rpa_etl_spark.tables import load
 
 registry.load_all_plans()
 
 
+def _executed(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
 def _plan(spark, sf_dir, name: str) -> str:
     spark.conf.set("spark.sql.maxMetadataStringLength", "10000")
-    df = registry.QUERIES[name](spark, sf_dir)
-    return df._jdf.queryExecution().executedPlan().toString()
+    return _executed(registry.QUERIES[name](spark, sf_dir))
+
+
+@contextmanager
+def _broadcast_off(spark):
+    """The 100 TB condition: only HINTED broadcasts plan a BroadcastExchange."""
+    saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+
+
+# One planning pass per conf, shared by the registry sweeps. Two passes, not
+# one: under -1 q_scalar_subquery plans a BroadcastNestedLoopJoin and
+# q_pagerank_dangling a CartesianProduct that the default conf does not.
+@pytest.fixture(scope="module")
+def default_plans(spark, sf_dir) -> dict[str, str]:
+    return {n: _plan(spark, sf_dir, n) for n in sorted(registry.QUERIES)}
+
+
+@pytest.fixture(scope="module")
+def broadcast_off_plans(spark, sf_dir) -> dict[str, str]:
+    with _broadcast_off(spark):
+        return {n: _plan(spark, sf_dir, n) for n in sorted(registry.QUERIES)}
+
+
+def _offenders(plans: dict[str, str], rule, allowed=()) -> dict[str, list[str]]:
+    return {n: bad for n, plan in plans.items() if n not in allowed and (bad := rule(plan))}
 
 
 def test_flagship_broadcasts_dims_not_facts(spark, sf_dir):
@@ -65,7 +101,11 @@ def test_asof_join_is_single_window_no_join(spark, sf_dir):
     assert "Window" in plan
 
 
-def test_no_query_plans_quadratic_joins(spark, sf_dir):
+def _quadratic_joins(plan: str) -> list[str]:
+    return [k for k in ("CartesianProduct", "BroadcastNestedLoopJoin") if k in plan]
+
+
+def test_no_query_plans_quadratic_joins(default_plans):
     """Global hygiene sweep: no declared query may plan a CartesianProduct
     or BroadcastNestedLoopJoin — every pair-generating operator must have
     been rewritten into an equi-join (banding/bucketing/LSH). A BNLJ that
@@ -88,19 +128,17 @@ def test_no_query_plans_quadratic_joins(spark, sf_dir):
     allowed_bnlj = {
         "q_join_range", "q_sim_topk", "q_pagerank_dangling", "q_profile_stats",
     }
-    offenders = {}
-    for name in sorted(registry.QUERIES):
-        if name in allowed_bnlj:
-            continue
-        plan = _plan(spark, sf_dir, name)
-        bad = [
-            kind
-            for kind in ("CartesianProduct", "BroadcastNestedLoopJoin")
-            if kind in plan
-        ]
-        if bad:
-            offenders[name] = bad
+    offenders = _offenders(default_plans, _quadratic_joins, allowed_bnlj)
     assert not offenders, f"quadratic join shapes: {offenders}"
+
+
+@pytest.mark.parametrize(
+    "how, kind", [("inner", "CartesianProduct"), ("left", "BroadcastNestedLoopJoin")]
+)
+def test_quadratic_join_rule_flags_non_equi_join(spark, how, kind):
+    a, b = spark.range(100).toDF("a"), spark.range(100).toDF("b")
+    with _broadcast_off(spark):
+        assert _quadratic_joins(_executed(a.join(b, a.a < b.b, how))) == [kind]
 
 
 def _unpartitioned_window_specs(plan: str) -> list[str]:
@@ -135,17 +173,20 @@ def _unpartitioned_window_specs(plan: str) -> list[str]:
     return out
 
 
-def test_no_query_plans_unpartitioned_windows(spark, sf_dir):
+def test_no_query_plans_unpartitioned_windows(default_plans):
     """No declared query may plan a Window with an empty PARTITION BY —
     that is a single-partition total sort of the full input. Distribution
     ranks (q_window_ntile) must use the range-partition + offset two-pass
     instead."""
-    offenders = {}
-    for name in sorted(registry.QUERIES):
-        specs = _unpartitioned_window_specs(_plan(spark, sf_dir, name))
-        if specs:
-            offenders[name] = specs[:2]
+    offenders = _offenders(default_plans, _unpartitioned_window_specs)
     assert not offenders, f"unpartitioned windows: {offenders}"
+
+
+def test_unpartitioned_window_rule_flags_global_order_by(spark):
+    df, rn = spark.range(100).withColumn("k", F.col("id") % 7), F.row_number()
+    flat = _executed(df.withColumn("rn", rn.over(Window.orderBy("id"))))
+    keyed = _executed(df.withColumn("rn", rn.over(Window.partitionBy("k").orderBy("id"))))
+    assert _unpartitioned_window_specs(flat) and not _unpartitioned_window_specs(keyed)
 
 
 def test_runtime_bloom_filter_injects_on_selective_dim_join(spark, sf_dir):
@@ -157,64 +198,45 @@ def test_runtime_bloom_filter_injects_on_selective_dim_join(spark, sf_dir):
     matches instead of the full table. Thresholds are lowered here because
     the test corpus is far below the production defaults (10 GB scan /
     10 MB creation side)."""
-    from pyspark.sql import functions as F
-
-    from rpa_etl_spark.tables import load
-
-    saved = {
-        k: spark.conf.get(k)
-        for k in (
-            "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
-            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-            "spark.sql.autoBroadcastJoinThreshold",
-        )
-    }
-    try:
-        spark.conf.set(
-            "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "1g"
-        )
-        spark.conf.set(
-            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-            "1",
-        )
-        # force a shuffle join: broadcast joins get no benefit from a
-        # runtime filter, so Catalyst skips injection for them
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        li = load(spark, sf_dir, "lineitem")
-        orders = load(spark, sf_dir, "orders").where(F.col("o_totalprice") > 400000)
-        j = li.join(orders, li.l_orderkey == orders.o_orderkey).select(
-            "l_orderkey", "l_extendedprice", "o_totalprice"
-        )
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "might_contain" in plan and "bloom_filter_agg" in plan
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
+    s = spark.newSession()  # thresholds stay out of the shared session
+    bloom = "spark.sql.optimizer.runtime.bloomFilter."
+    s.conf.set(bloom + "creationSideThreshold", "1g")
+    s.conf.set(bloom + "applicationSideScanSizeThreshold", "1")
+    # force a shuffle join: broadcast joins get no benefit from a
+    # runtime filter, so Catalyst skips injection for them
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    li = load(s, sf_dir, "lineitem")
+    orders = load(s, sf_dir, "orders").where(F.col("o_totalprice") > 400000)
+    j = li.join(orders, li.l_orderkey == orders.o_orderkey).select(
+        "l_orderkey", "l_extendedprice", "o_totalprice"
+    )
+    plan = _executed(j)
+    assert "might_contain" in plan and "bloom_filter_agg" in plan
 
 
 FACT_TABLES = ("lineitem", "orders", "events", "documents", "embeddings")
 
 
-def _broadcast_subtrees(plan: str) -> list[str]:
-    """Extract the text of every BroadcastExchange subtree from the plan's
-    indented tree rendering: lines below the exchange whose tree-prefix is
-    deeper belong to its build side."""
+def _depth(line: str) -> int:
+    return len(line) - len(line.lstrip(" :+-"))
+
+
+def _subtree(lines: list[str], k: int) -> list[str]:
+    """Node k of an indented plan-tree rendering and all its descendants."""
+    end = k + 1
+    while end < len(lines) and lines[end].strip() and _depth(lines[end]) > _depth(lines[k]):
+        end += 1
+    return lines[k:end]
+
+
+def _broadcast_subtrees(plan: str) -> list[list[str]]:
+    """Every BroadcastExchange subtree: the exchange and its build side."""
     lines = plan.splitlines()
-    out = []
-    for k, line in enumerate(lines):
-        if "BroadcastExchange" not in line:
-            continue
-        depth = len(line) - len(line.lstrip(" :+-"))
-        sub = [line]
-        for nxt in lines[k + 1 :]:
-            if not nxt.strip():
-                break
-            nd = len(nxt) - len(nxt.lstrip(" :+-"))
-            if nd <= depth:
-                break
-            sub.append(nxt)
-        out.append("\n".join(sub))
-    return out
+    return [_subtree(lines, k) for k, line in enumerate(lines) if "BroadcastExchange" in line]
+
+
+def _scans_fact(sub: list[str]) -> bool:
+    return any(f"/{t}.parquet" in line for line in sub for t in FACT_TABLES)
 
 
 _AGG_LIMIT_RE = re.compile(
@@ -230,49 +252,63 @@ _FILTER_LINE_RE = re.compile(r"^\s*[:+\- ]*\*?\(?\d*\)?\s*Filter (.*)$", re.M)
 _CMP_RE = re.compile(r"[<>=]|\bIN\b|LIKE|Contains|StartsWith|EndsWith|rlike", re.I)
 
 
-def _bounded(sub: str) -> bool:
-    if _AGG_LIMIT_RE.search(sub):
-        return True
-    # a LEFT SEMI join is a row-subset operator on its stream side (output
-    # ⊆ input, by definition) — the same reduction class as a selective
-    # Filter. Round 15: salted_join's hot dim slice is (dim LEFT SEMI
-    # bounded-hot-key-set) — the bounding Aggregate+Filter live behind a
-    # localCheckpoint (ExistingRDD), invisible to this text heuristic, but
-    # the semi join itself is the visible reduction. (The semi's own build
-    # side is a separate hinted BroadcastExchange that this gate examines
-    # independently.)
-    if re.search(r"\bLeftSemi\b", sub):
-        return True
-    return any(_CMP_RE.search(m.group(1)) for m in _FILTER_LINE_RE.finditer(sub))
+def _semi_join_bounds(sub: list[str]) -> bool:
+    """A LEFT SEMI join bounds only if its own build side is a broadcast of
+    no fact table: salted_join's dim LEFT SEMI broadcast(hot-key set), whose
+    bounding Aggregate+Filter hide behind a localCheckpoint (ExistingRDD)."""
+    for k, line in enumerate(sub):
+        if "LeftSemi" not in line or len(join := _subtree(sub, k)) < 2:
+            continue
+        # the last child is the build side: a semi join builds right
+        build = _subtree(join, max(i for i, x in enumerate(join) if _depth(x) == _depth(join[1])))
+        if "BroadcastExchange" in build[0] and not _scans_fact(build):
+            return True
+    return False
 
 
-def test_no_query_broadcasts_unbounded_fact_side(spark, sf_dir):
+def _bounded(sub: list[str]) -> bool:
+    text = "\n".join(sub)
+    if _AGG_LIMIT_RE.search(text) or _semi_join_bounds(sub):
+        return True
+    return any(_CMP_RE.search(m.group(1)) for m in _FILTER_LINE_RE.finditer(text))
+
+
+def _unbounded_fact_broadcasts(plan: str) -> list[str]:
+    """Broadcasts of a fact table or a cache with no bounding node."""
+    return [
+        sub[0][:100]
+        for sub in _broadcast_subtrees(plan)
+        if (_scans_fact(sub) or "InMemoryTableScan" in "".join(sub)) and not _bounded(sub)
+    ]
+
+
+def test_no_query_broadcasts_unbounded_fact_side(broadcast_off_plans):
     """The flagship dims-only broadcast rule, generalized to every declared
     query: with autoBroadcastJoinThreshold=-1 only HINTED broadcasts plan a
     BroadcastExchange, and no hinted build side may be an UNREDUCED fact /
     corpus table — at 100 TB that broadcast grows with the data (the
     q_ann_ivf_trained regression this gate pins, round-6 verdict #1). A
     fact-derived build side is fine when something bounds it first: a
-    Filter (selective predicate), a Limit/TakeOrdered, or an Aggregate
-    (group-count-bounded). Cached relations get the same rule: an
+    Filter (selective predicate), a Limit/TakeOrdered, an Aggregate
+    (group-count-bounded), or a semi join against a bounded broadcast
+    (_semi_join_bounds). Cached relations get the same rule: an
     InMemoryTableScan inside a hinted broadcast with no bounding node is a
     corpus-sized broadcast wearing a cache."""
-    saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    offenders: dict[str, list[str]] = {}
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        for name in sorted(registry.QUERIES):
-            plan = _plan(spark, sf_dir, name)
-            for sub in _broadcast_subtrees(plan):
-                if _bounded(sub):
-                    continue
-                scans_fact = any(f"/{t}.parquet" in sub for t in FACT_TABLES)
-                scans_cache = "InMemoryTableScan" in sub
-                if scans_fact or scans_cache:
-                    offenders.setdefault(name, []).append(sub.splitlines()[0][:100])
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+    offenders = _offenders(broadcast_off_plans, _unbounded_fact_broadcasts)
     assert not offenders, f"unbounded fact-side broadcasts: {offenders}"
+
+
+def test_fact_broadcast_rule_rejects_semi_join_over_fact(spark, sf_dir, broadcast_off_plans):
+    """`orders LEFT SEMI lineitem` is as large as orders; q_join_skew_salted's
+    semi against its checkpointed hot-key set is bounded."""
+    orders, li = load(spark, sf_dir, "orders"), load(spark, sf_dir, "lineitem")
+    cust = load(spark, sf_dir, "customer")
+    semi = orders.join(li, orders.o_orderkey == li.l_orderkey, "left_semi")
+    with _broadcast_off(spark):
+        plan = _executed(cust.join(F.broadcast(semi), cust.c_custkey == semi.o_custkey))
+    assert _unbounded_fact_broadcasts(plan), plan
+    salted = broadcast_off_plans["q_join_skew_salted"]
+    assert "LeftSemi" in salted and not _unbounded_fact_broadcasts(salted)
 
 
 def test_funnel_is_single_exchange(spark, sf_dir):
@@ -383,8 +419,6 @@ def test_aqe_skew_join_splits_hot_partition(spark):
     salting restructures the query when the author knows the skew;
     AQE handles the skew nobody predicted, and this gate proves the
     session's conf set actually delivers it."""
-    from pyspark.sql import functions as F
-
     s = spark.newSession()  # thresholds stay out of the shared session
     s.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
     s.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "16KB")
