@@ -17,3 +17,7 @@ Layout:
 """
 
 __version__ = "0.1.0"
+
+from rpa_etl_spark._worker import install_zipimport_guard
+
+install_zipimport_guard()

@@ -106,8 +106,15 @@ PRIORITY_ORDER = [
     "q_join_skew_salted",
     "q_agg_skew_salted",
     "q_scan_project",
-    # == tier C (13): r11-stale fill, in their prior relative order —
-    #    13 of the 36 r11-verdict queries fit after tiers A and B; the
+    # == tier D (4): consumers of sources/pdf.py (read_pdf_files docstring
+    #    corrected) — kernel-consumer rule pulls them in. Their Python
+    #    workers also load the new zipimport guard (_worker.py).
+    "q_pdf_extract",
+    "q_pdf_extract_hard",
+    "q_pdf_extract_passworded",
+    "q_pdf_extract_encrypted",
+    # == tier C (9): r11-stale fill, in their prior relative order —
+    #    9 of the 36 r11-verdict queries fit after tiers A, B, B' and D; the
     #    rest sit directly below the window, oldest-first, so any future
     #    rotation picks them up next.
     "q_having_large_orders",
@@ -119,13 +126,13 @@ PRIORITY_ORDER = [
     "q_histogram",
     "q_sample_stratified",
     "q_funnel",
+    # ---------------- below the sampled window ----------------
+    # == r11-stale remainder (27 of 36; kernels/plans unchanged since
+    #    their green verdict, covered by the local 180/180 oracle sweep):
     "q_retention_cohort",
     "q_outlier_zscore",
     "q_unpivot",
     "q_embedding_centroid",
-    # ---------------- below the sampled window ----------------
-    # == r11-stale remainder (23 of 36; kernels/plans unchanged since
-    #    their green verdict, covered by the local 180/180 oracle sweep):
     "q_repetition_stats",
     "q_join_asof",
     "q_heavy_hitters_cms",
@@ -241,10 +248,6 @@ PRIORITY_ORDER = [
     "q_domain_mix_bpe",
     "q_pagerank",
     "q_pagerank_dangling",
-    "q_pdf_extract",
-    "q_pdf_extract_hard",
-    "q_pdf_extract_passworded",
-    "q_pdf_extract_encrypted",
     "q_recursive_cte",
     "q_dedup_bloom",
     "q_profile_stats",

@@ -5,6 +5,23 @@ same confs are what we would ship to a 1000-executor cluster (AQE on, skew
 join handling on, Arrow for the few pandas-UDF paths, explicit shuffle
 parallelism — on a real cluster `spark.sql.shuffle.partitions` would be
 sized ~2-3x total cores and AQE coalesces the rest).
+
+Python workers get one fix that no conf can carry. Every task's worker calls
+`importlib.invalidate_caches()` (`pyspark/worker_util.py:setup_spark_files`).
+On CPython < 3.13 that makes each `zipimporter` in `sys.path_importer_cache`
+re-read its archive's whole central directory. A warm worker holds 16 of
+them, over `pyspark.zip`, the py4j zip and the `spark-core` jar that
+`SparkContext.jarOfObject` puts on the worker path. Together they cost
+170-280 ms of worker CPU per task on a 4-core box, against < 2 ms in the
+user function.
+CPython 3.13 changed `zipimporter.invalidate_caches` to only drop the cache,
+so the fix is gated to older versions. `rpa_etl_spark/_worker.py` replaces
+the method with one that re-reads an archive only when its (mtime, size,
+inode) stamp moved. It is installed when the package is imported inside a
+worker (engine functions are pickled by reference, so every worker that runs
+engine code imports it), not through `spark.python.daemon.module`: that conf
+would miss the sessions this factory does not build, such as an external
+driver's own `SparkSession`. The driver's import machinery is left alone.
 """
 
 from __future__ import annotations

@@ -52,9 +52,11 @@ PDF_EXTRACTION_SCHEMA = StructType(
 
 
 def read_pdf_files(spark: SparkSession, path_glob: str) -> DataFrame:
-    """S1 — distributed binary scan. At 100 TB of small PDFs the file index
-    is the bottleneck: use recursiveFileLookup + a coarse repartition so
-    extraction parallelism is not bound by file count per directory."""
+    """S1 — distributed binary scan: every `*.pdf` (pathGlobFilter) under
+    `path_glob`, found by recursiveFileLookup. No repartition: the task
+    count is Spark's binaryFile file packing (files are packed into
+    `maxPartitionBytes` splits, each file costing at least
+    `openCostInBytes`, 32 small PDFs per task at the defaults)."""
     return (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.pdf")

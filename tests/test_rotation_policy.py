@@ -129,6 +129,7 @@ KERNEL_CONSUMERS: dict[str, list[str]] = {
     "rpa_etl_spark/pipeline.py": ["q_flagship"],
     "rpa_etl_spark/tables.py": ["q_flagship", "q_scan_project"],
     "rpa_etl_spark/session.py": [],  # config only; every query exercises it
+    "rpa_etl_spark/_worker.py": [],  # worker import set-up; every Python-UDF query loads it
     "rpa_etl_spark/registry.py": [],  # ordering/registration plumbing
 }
 
