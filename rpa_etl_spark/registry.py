@@ -113,10 +113,14 @@ PRIORITY_ORDER = [
     "q_pdf_extract_hard",
     "q_pdf_extract_passworded",
     "q_pdf_extract_encrypted",
-    # == tier C (9): r11-stale fill, in their prior relative order —
-    #    9 of the 36 r11-verdict queries fit after tiers A, B, B' and D; the
-    #    rest sit directly below the window, oldest-first, so any future
-    #    rotation picks them up next.
+    # == tier E (1): the one declared consumer of pipeline.py, whose
+    #    VALIDATE/SCORE/ROUTE moved into the Arrow parse batch —
+    #    kernel-consumer rule pulls it in.
+    "q_pipeline_e2e",
+    # == tier C (8): r11-stale fill, in their prior relative order —
+    #    8 of the 36 r11-verdict queries fit after tiers A, B, B', D and E;
+    #    the rest sit directly below the window, oldest-first, so any
+    #    future rotation picks them up next.
     "q_having_large_orders",
     "q_lateral_topk",
     "q_quantiles",
@@ -125,10 +129,10 @@ PRIORITY_ORDER = [
     "q_tfidf_terms",
     "q_histogram",
     "q_sample_stratified",
-    "q_funnel",
     # ---------------- below the sampled window ----------------
-    # == r11-stale remainder (27 of 36; kernels/plans unchanged since
+    # == r11-stale remainder (28 of 36; kernels/plans unchanged since
     #    their green verdict, covered by the local 180/180 oracle sweep):
+    "q_funnel",
     "q_retention_cohort",
     "q_outlier_zscore",
     "q_unpivot",
@@ -199,7 +203,6 @@ PRIORITY_ORDER = [
     "q_scalar_subquery",
     "q_unigram_logprob",
     "q_url_dedup",
-    "q_pipeline_e2e",
     "q_warc_extract",
     "q_tar_extract",
     "q_multimodal_meta",

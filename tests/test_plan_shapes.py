@@ -437,3 +437,66 @@ def test_aqe_skew_join_splits_hot_partition(spark):
     plan = j._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin(skew=true)" in plan, plan[:2000]
     assert "skewed" in plan  # the AQEShuffleRead over the hot side
+
+
+def _plan_nodes(node, above=()):
+    """Every node of a physical plan, with the nodes above it."""
+    yield node, above
+    kids = node.children()
+    for i in range(kids.size()):
+        yield from _plan_nodes(kids.apply(i), (*above, node))
+
+
+def _pipeline_python_violations(df) -> list[str]:
+    """The document pipeline's Python nodes: one MapInPandas (extract), one
+    ArrowEvalPython (parse + validate/score/route), and no higher-order
+    lambda in a Project above the ArrowEvalPython — such a lambda is
+    judging work left to the JVM after the parse batch."""
+    nodes = list(_plan_nodes(df._jdf.queryExecution().executedPlan()))
+    names = [n.nodeName() for n, _ in nodes]
+    bad = [f"{k} x{names.count(k)}" for k in ("MapInPandas", "ArrowEvalPython")
+           if names.count(k) != 1]
+    for node, above in nodes:
+        if node.nodeName() != "ArrowEvalPython":
+            continue
+        for proj in (a for a in above if a.nodeName() == "Project"):
+            exprs = proj.expressions()
+            bad += [f"lambda above ArrowEvalPython: {e.toString()[:200]}"
+                    for e in (exprs.apply(i) for i in range(exprs.size()))
+                    if "lambdafunction" in e.toString()]
+    return bad
+
+
+@pytest.fixture(scope="module")
+def invoice_pdf_dir(tmp_path_factory) -> str:
+    from rpa_etl_spark.sources import minipdf
+    from tests.test_parsing import GOLDEN
+
+    d = tmp_path_factory.mktemp("invoice_pdfs")
+    for i, text in enumerate([GOLDEN, GOLDEN.replace("R$ 4.450,00", "R$ 44.500,00")]):
+        (d / f"inv{i}.pdf").write_bytes(minipdf.write_pdf([text.split("\n")]))
+    return str(d)
+
+
+def test_pipeline_judges_inside_the_parse_batch(spark, invoice_pdf_dir):
+    from rpa_etl_spark.pipeline import process_documents
+    from rpa_etl_spark.sources.pdf import pdf_pipeline
+
+    df = process_documents(pdf_pipeline(spark, invoice_pdf_dir))
+    assert _pipeline_python_violations(df) == []
+    assert {r["route"] for r in df.collect()} == {"processamento_normal", "auditoria_fiscal"}
+
+
+def test_python_node_rule_rejects_column_judge_above_parse(spark, invoice_pdf_dir):
+    """Negative case: the Column validate/score/route chain over the parse
+    kernel's output (the pipeline's earlier shape) fails the lambda rule."""
+    from rpa_etl_spark.functions.parsing_arrow import parse_invoices_arrow
+    from rpa_etl_spark.functions.text import normalize_text
+    from rpa_etl_spark.sources.pdf import pdf_pipeline
+    from tests.test_pipeline_judge import column_judge
+
+    df = pdf_pipeline(spark, invoice_pdf_dir).withColumn(
+        "normalized_text", normalize_text(F.col("text")))
+    bad = _pipeline_python_violations(
+        column_judge(parse_invoices_arrow(df, text_col="normalized_text")))
+    assert bad and all(b.startswith("lambda above") for b in bad), bad

@@ -17,6 +17,8 @@ tier 4); this test makes the rule self-enforcing:
 - Kernel modules (operators/, sources/, functions/, streaming/, and the
   shared top-level modules) map to representative consumer queries via
   KERNEL_CONSUMERS; a kernel edit requires its consumers in the window.
+  Kernel modules are compared as ASTs with docstrings stripped, so an
+  edit to prose alone (docstrings, comments) re-queues nothing.
   A completeness guard fails when a new module lacks a mapping — adding
   one is a conscious decision, not an accident.
 """
@@ -24,7 +26,9 @@ tier 4); this test makes the rule self-enforcing:
 from __future__ import annotations
 
 import ast
+import inspect
 import os
+import re
 import subprocess
 
 import pytest
@@ -107,8 +111,8 @@ KERNEL_CONSUMERS: dict[str, list[str]] = {
     "rpa_etl_spark/sources/sinks.py": ["q_sink_roundtrip", "q_ingest_malformed"],
     "rpa_etl_spark/functions/exprs.py": ["q_parse_invoice"],
     "rpa_etl_spark/functions/parsing.py": ["q_parse_invoice"],
-    "rpa_etl_spark/functions/parsing_arrow.py": ["q_parse_invoice"],
-    "rpa_etl_spark/functions/scoring.py": ["q_trust_score", "q_case_routing"],
+    "rpa_etl_spark/functions/parsing_arrow.py": ["q_parse_invoice", "q_pipeline_e2e"],
+    "rpa_etl_spark/functions/scoring.py": ["q_trust_score", "q_case_routing", "q_pipeline_e2e"],
     "rpa_etl_spark/functions/text.py": ["q_normalize_docs", "q_dedup_lines"],
     "rpa_etl_spark/functions/urls.py": ["q_url_parse", "q_url_dedup"],
     "rpa_etl_spark/functions/validators.py": [
@@ -126,7 +130,7 @@ KERNEL_CONSUMERS: dict[str, list[str]] = {
     ],
     "rpa_etl_spark/streaming/stateful.py": ["q_user_totals_state", "q_stream_session_ttl"],
     "rpa_etl_spark/streaming/stateful_v2.py": ["q_user_totals_state", "q_stream_session_ttl"],
-    "rpa_etl_spark/pipeline.py": ["q_flagship"],
+    "rpa_etl_spark/pipeline.py": ["q_pipeline_e2e"],
     "rpa_etl_spark/tables.py": ["q_flagship", "q_scan_project"],
     "rpa_etl_spark/session.py": [],  # config only; every query exercises it
     "rpa_etl_spark/_worker.py": [],  # worker import set-up; every Python-UDF query loads it
@@ -192,38 +196,61 @@ def test_kernel_consumer_map_is_complete():
     assert not unknown, f"KERNEL_CONSUMERS references unknown queries: {unknown}"
 
 
+def _code_dump(src: str) -> str:
+    """The module's AST with every docstring removed (comments never reach
+    the AST): an edit that changes only prose changes no behaviour."""
+    tree = ast.parse(src)
+    for node in ast.walk(tree):
+        if isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)):
+            body = node.body
+            if (body and isinstance(body[0], ast.Expr)
+                    and isinstance(body[0].value, ast.Constant)
+                    and isinstance(body[0].value.value, str)):
+                node.body = body[1:] or [ast.Pass()]
+    return ast.dump(tree)
+
+
+def _affected(changes: dict[str, tuple[str, str | None]]) -> dict[str, str]:
+    """Queries re-queued by ``changes`` (repo-relative path → source at the
+    base, source now or None when deleted), mapped to the reason."""
+    affected: dict[str, str] = {}  # query -> reason
+    for rel, (old_src, new_src) in changes.items():
+        if rel.startswith("rpa_etl_spark/plans/"):
+            if new_src is None:
+                # plan file DELETED since the base: its queries are gone
+                # from the registry too — nothing left to re-queue
+                continue
+            old_q = _query_fn_sources(old_src) if old_src else {}
+            for name, seg in _query_fn_sources(new_src).items():
+                if old_q.get(name) != seg:
+                    affected[name] = f"{rel} (function changed)"
+        elif rel in KERNEL_CONSUMERS:
+            if old_src and new_src and _code_dump(old_src) == _code_dump(new_src):
+                continue
+            for name in KERNEL_CONSUMERS[rel]:
+                affected[name] = f"{rel} (kernel changed)"
+    return affected
+
+
 def test_changed_queries_are_in_sampled_window():
     base = _base_commit()
     if base is None:
         pytest.skip("no rotation_base.txt or base commit unavailable")
-    changed_files = [
-        f
-        for f in _git("diff", "--name-only", base, "--", "rpa_etl_spark/").split()
-        if f.endswith(".py")
-    ]
-    affected: dict[str, str] = {}  # query -> reason
-    for path in changed_files:
-        rel = path
-        if rel.startswith("rpa_etl_spark/plans/"):
-            try:
-                old_src = _git("show", f"{base}:{rel}")
-            except subprocess.CalledProcessError:
-                old_src = ""
-            abs_path = os.path.join(REPO, rel)
-            if not os.path.exists(abs_path):
-                # plan file DELETED since the base: its queries are gone
-                # from the registry too — nothing left to re-queue
-                continue
+    changes: dict[str, tuple[str, str | None]] = {}
+    for rel in _git("diff", "--name-only", base, "--", "rpa_etl_spark/").split():
+        if not rel.endswith(".py"):
+            continue
+        try:
+            old_src = _git("show", f"{base}:{rel}")
+        except subprocess.CalledProcessError:
+            old_src = ""
+        abs_path = os.path.join(REPO, rel)
+        new_src = None
+        if os.path.exists(abs_path):
             with open(abs_path) as f:
                 new_src = f.read()
-            old_q = _query_fn_sources(old_src) if old_src else {}
-            new_q = _query_fn_sources(new_src)
-            for name, seg in new_q.items():
-                if old_q.get(name) != seg:
-                    affected[name] = f"{rel} (function changed)"
-        elif rel in KERNEL_CONSUMERS:
-            for name in KERNEL_CONSUMERS[rel]:
-                affected[name] = f"{rel} (kernel changed)"
+        changes[rel] = (old_src, new_src)
+    affected = _affected(changes)
     window = set(registry.PRIORITY_ORDER[:SAMPLED_WINDOW])
     stale = {
         q: why
@@ -235,3 +262,37 @@ def test_changed_queries_are_in_sampled_window():
         f"window (first {SAMPLED_WINDOW} of PRIORITY_ORDER) — promote them "
         f"to tier 1a or re-rotate: {stale}"
     )
+
+
+_KERNEL = '''"""A kernel module."""
+
+
+def f(x):
+    """Add one."""
+    return x + 1
+'''
+
+
+def test_docstring_only_kernel_edit_queues_nothing():
+    edited = _KERNEL.replace("A kernel module.", "A kernel module, reworded.").replace(
+        "Add one.", "Return the successor of x.")
+    assert edited != _KERNEL
+    assert _affected({"rpa_etl_spark/sources/pdf.py": (_KERNEL, edited)}) == {}
+
+
+def test_one_token_kernel_edit_queues_its_consumers():
+    edited = _KERNEL.replace("x + 1", "x + 2")
+    got = _affected({"rpa_etl_spark/sources/pdf.py": (_KERNEL, edited)})
+    assert set(got) == set(KERNEL_CONSUMERS["rpa_etl_spark/sources/pdf.py"])
+
+
+def test_process_documents_callers_are_pipeline_consumers():
+    """Every declared query that runs the document pipeline is re-queued
+    when pipeline.py changes."""
+    callers = {
+        name for name, fn in registry.QUERIES.items()
+        if re.search(r"\bprocess_documents\w*\(", inspect.getsource(fn))
+    }
+    assert callers, "no declared query calls process_documents"
+    missing = callers - set(KERNEL_CONSUMERS["rpa_etl_spark/pipeline.py"])
+    assert not missing, f"call process_documents but are not mapped to pipeline.py: {missing}"
