@@ -8,7 +8,8 @@ content hashes, reduction metrics). Each reference stage maps to a narrow
 section of ONE fused Spark pass — no shuffle anywhere in the pipeline, so
 it scales linearly with the corpus:
 
-    READ      → caller provides text (or sources/pdf.pdf_pipeline output)
+    READ      → caller provides text, or sources/pdf.pdf_pipeline output
+                (extracted in one task per core; more on a large corpus)
     NORMALIZE → functions/text.normalize_text  (+ hash & reduction ratio)
     PARSE     → functions/parsing_arrow._parse_one (B1-B5)   ┐ one Arrow
     VALIDATE  → _judge: V2/V3/V4 checks → issues array       │ batch: one
@@ -130,6 +131,10 @@ def process_documents(df: DataFrame, text_col: str = "text",
     ``raw_sha256, normalized_text, norm_sha256, reduction_ratio,
     emission_date, competence_date, chave_acesso, issuer, recipient,
     items, total, validation_issues, trust_score, status, route``.
+    Every added column is nullable but the default ``tenant_id``. The judged
+    ones (``validation_issues``, ``status``, ``route``) come from a pandas-UDF
+    struct, which Spark marks nullable, though no value is ever null;
+    tests/test_pipeline_e2e.py pins the whole schema.
     """
     normalize, post_norm = _static_cols(text_col)
     # NORMALIZE (P8 chain) + O1 hashes + O5 reduction ratio

@@ -106,9 +106,9 @@ PRIORITY_ORDER = [
     "q_join_skew_salted",
     "q_agg_skew_salted",
     "q_scan_project",
-    # == tier D (4): consumers of sources/pdf.py (read_pdf_files docstring
-    #    corrected) — kernel-consumer rule pulls them in. Their Python
-    #    workers also load the new zipimport guard (_worker.py).
+    # == tier D (4): consumers of sources/pdf.py (pdf_pipeline now sizes
+    #    its scan to the cores; these extract synthesized PDFs and keep
+    #    their own partitioning) — kernel-consumer rule pulls them in.
     "q_pdf_extract",
     "q_pdf_extract_hard",
     "q_pdf_extract_passworded",

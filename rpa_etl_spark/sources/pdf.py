@@ -8,6 +8,8 @@ extraction with page/encoding metadata) and `api/dependencies.py:12-49`
   listing, predicate-prunable on path/length metadata columns;
 - ingress validation: plain filters on the metadata columns (pushed to the
   file index where possible);
+- sizing (``pdf_pipeline``): the scan is coalesced to one task per core,
+  or more when the corpus exceeds ``maxPartitionBytes`` per task;
 - extraction: ``mapInPandas`` over Arrow batches — one Python worker call
   per batch of documents, never per row.
 
@@ -53,10 +55,10 @@ PDF_EXTRACTION_SCHEMA = StructType(
 
 def read_pdf_files(spark: SparkSession, path_glob: str) -> DataFrame:
     """S1 — distributed binary scan: every `*.pdf` (pathGlobFilter) under
-    `path_glob`, found by recursiveFileLookup. No repartition: the task
-    count is Spark's binaryFile file packing (files are packed into
-    `maxPartitionBytes` splits, each file costing at least
-    `openCostInBytes`, 32 small PDFs per task at the defaults)."""
+    `path_glob`, found by recursiveFileLookup. The task count is Spark's
+    binaryFile file packing: files are packed into `maxPartitionBytes`
+    splits, each file costing at least `openCostInBytes`, so 32 small PDFs
+    per task at the defaults. `pdf_pipeline` resizes it (`_core_sized`)."""
     return (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.pdf")
@@ -343,9 +345,26 @@ def extract_pdf_text(
     )
 
 
+def _core_sized(scan: DataFrame) -> DataFrame:
+    """Coalesce ``scan`` to max(defaultParallelism, ceil(scan bytes /
+    maxPartitionBytes)) tasks. Bytes are the plan's size statistic (the
+    sum of the listed file sizes; no Spark job). File packing charges each
+    file `openCostInBytes` (4 MB), so a small-file corpus splits by file
+    count, and every split then starts its Python runners for a few ms of
+    decode; the byte term keeps ~128 MB of real bytes per task on a large
+    corpus. A coalesce is narrow and can only merge splits, and the
+    ingress filters are pushed below it, onto the scan."""
+    session = scan.sparkSession
+    size = int(scan._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    cap = session._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    return scan.coalesce(max(session.sparkContext.defaultParallelism, -(-size // cap)))
+
+
 def pdf_pipeline(spark: SparkSession, path_glob: str) -> DataFrame:
-    """scan → ingress gates → Arrow-batched extraction (one narrow chain)."""
-    return extract_pdf_text(validate_pdf_ingress(read_pdf_files(spark, path_glob)))
+    """scan → core-sized tasks (`_core_sized`) → ingress gates →
+    Arrow-batched extraction (one narrow chain, one stage)."""
+    scan = _core_sized(read_pdf_files(spark, path_glob))
+    return extract_pdf_text(validate_pdf_ingress(scan))
 
 
 # password-protected corpus (round 8): cipher x layout rotating on

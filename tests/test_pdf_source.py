@@ -152,6 +152,42 @@ def test_pdf_size_gate(spark, tmp_path):
     assert P.validate_pdf_ingress(df, max_bytes=10_000).count() == 1
 
 
+def _tiny_pdfs(tmp_path, n: int) -> int:
+    """Write ``n`` one-line PDFs; returns their total bytes."""
+    for i in range(n):
+        (tmp_path / f"d{i}.pdf").write_bytes(make_pdf([[f"doc {i}"]]))
+    return sum(f.stat().st_size for f in tmp_path.iterdir())
+
+
+def test_pdf_pipeline_runs_one_task_per_core_on_small_files(spark, tmp_path):
+    """File packing charges each file `openCostInBytes` (4 MB), so more
+    than 32 tiny PDFs per core split the bare scan by file count; the
+    pipeline extracts them in exactly one task per core."""
+    cores = spark.sparkContext.defaultParallelism
+    n = 32 * cores + 8
+    _tiny_pdfs(tmp_path, n)
+    assert P.read_pdf_files(spark, str(tmp_path)).rdd.getNumPartitions() > cores
+    df = P.pdf_pipeline(spark, str(tmp_path))
+    assert df.rdd.getNumPartitions() == cores
+    assert df.count() == n
+
+
+def test_pdf_pipeline_keeps_the_byte_cap_per_task(spark, tmp_path):
+    """Negative case of the per-core sizing: when the corpus holds more
+    than `maxPartitionBytes` per core, the pipeline keeps at least
+    ceil(bytes / cap) tasks, more than a bare coalesce(cores) leaves."""
+    cores = spark.sparkContext.defaultParallelism
+    size = _tiny_pdfs(tmp_path, 4 * cores)
+    cap = size // (3 * cores)
+    capped = spark.newSession()
+    capped.conf.set("spark.sql.files.maxPartitionBytes", str(cap))
+    want = -(-size // cap)
+    assert want > cores
+    df = P.pdf_pipeline(capped, str(tmp_path))
+    assert df.rdd.getNumPartitions() >= want
+    assert df.count() == 4 * cores
+
+
 def test_pdf_corpus_invariants_for_declared_query(sf_dir):
     """q_pdf_extract's writer encodes page text as latin-1 and its oracle
     mirrors an ASCII whitespace-collapse; both assumptions must hold for

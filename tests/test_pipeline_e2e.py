@@ -125,3 +125,54 @@ def test_pipeline_handles_empty_and_degenerate_inputs(spark):
     for r in rows:
         assert r["status"] in ("success", "partial", "error")
         assert r["route"] == "revisao_manual"  # nothing parseable → manual
+
+
+def _ddl(dt) -> str:
+    """A type as DDL, with ``NOT NULL`` on non-nullable struct fields and
+    array elements (``simpleString`` drops nullability)."""
+    from pyspark.sql.types import ArrayType, StructType
+
+    if isinstance(dt, StructType):
+        return "struct<" + ", ".join(_field(f) for f in dt.fields) + ">"
+    if isinstance(dt, ArrayType):
+        return f"array<{_ddl(dt.elementType)}{'' if dt.containsNull else ' NOT NULL'}>"
+    return dt.simpleString()
+
+
+def _field(f) -> str:
+    return f"{f.name}: {_ddl(f.dataType)}{'' if f.nullable else ' NOT NULL'}"
+
+
+_STR_PAIR = "struct<name: string, cnpj_cpf: string>"
+_ISSUE = "struct<code: string NOT NULL, field: string NOT NULL, severity: string NOT NULL>"
+PIPELINE_SCHEMA = [
+    "doc_id: bigint",
+    "text: string",
+    "raw_sha256: string",
+    "normalized_text: string",
+    "norm_sha256: string",
+    "reduction_ratio: double",
+    "emission_date: string",
+    "competence_date: string",
+    "chave_acesso: string",
+    f"issuer: {_STR_PAIR}",
+    f"recipient: {_STR_PAIR}",
+    "items: array<struct<description: string, unit_value: string, raw: string>>",
+    "total: string",
+    f"validation_issues: array<{_ISSUE} NOT NULL>",
+    "trust_score: decimal(4,2)",
+    "status: string",
+    "route: string",
+    "tenant_id: string NOT NULL",
+]
+
+
+def test_pipeline_output_schema_is_pinned(spark):
+    """Names, order, types and nullability of the output, as a sink table
+    would declare them. The judged fields come out of the parse batch's
+    pandas-UDF struct, so `validation_issues`, `status` and `route` are
+    nullable at the top level although no value is ever null (the
+    degenerate-input test above checks the values)."""
+    df = spark.createDataFrame([], "doc_id long, text string")
+    assert [_field(f) for f in process_documents(df).schema.fields] == PIPELINE_SCHEMA
+
