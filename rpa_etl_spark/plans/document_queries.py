@@ -296,8 +296,7 @@ def q_pdf_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         .transform(spread)
     )
     extracted = P.extract_pdf_text(
-        P.validate_pdf_ingress(P.synth_invoice_pdfs(docs)),
-        force_minipdf=True,  # oracle encodes minipdf's exact layout
+        P.validate_pdf_ingress(P.synth_invoice_pdfs(docs))
     )
     return extracted.select(
         F.regexp_extract("path", r"(\d+)\.pdf$", 1).cast("long").alias("doc_id"),
@@ -357,8 +356,8 @@ def q_pdf_extract_hard(spark: SparkSession, sf_dir: str) -> DataFrame:
     /ObjStm container, packed strings plaintext per §7.5.7 (variant 12),
     and AES-128 with /Encrypt + /ID carried by the never-encrypted xref
     STREAM dict, §7.5.8.2 (variant 13). The reference gets this coverage
-    from PyMuPDF (robot/pdf_reader.py:23-58), which never sees a clean-
-    xref guarantee; here the pure-Python structured parser
+    from its PDF library (robot/pdf_reader.py:23-58), which never sees a
+    clean-xref guarantee; here the pure-Python structured parser
     (minipdf.extract_text_structured + PdfDoc salvage) must round-trip
     every layout back to the SAME analytic text the oracle reconstructs
     from the documents table — a single xref/filter/CMap/salvage bug
@@ -373,8 +372,7 @@ def q_pdf_extract_hard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .transform(spread)
     )
     extracted = P.extract_pdf_text(
-        P.validate_pdf_ingress(P.synth_invoice_pdfs_hard(docs)),
-        force_minipdf=True,
+        P.validate_pdf_ingress(P.synth_invoice_pdfs_hard(docs))
     )
     doc_id = F.regexp_extract("path", r"(\d+)\.pdf$", 1).cast("long")
     return extracted.select(
@@ -430,7 +428,8 @@ def q_pdf_extract_encrypted(spark: SparkSession, sf_dir: str) -> DataFrame:
     6 groups) → applyInPandas(write) → mapInPandas(extract); the shuffle
     is over the fixture rows only — corpus-size-independent — and the six
     reader KDF runs execute in parallel, one per task. Reference parity:
-    PyMuPDF opens AES-256 files natively (robot/pdf_reader.py:23-58)."""
+    the reference's PDF library opens AES-256 files natively
+    (robot/pdf_reader.py:23-58)."""
     from rpa_etl_spark.sources import pdf as P
 
     docs = (
@@ -443,8 +442,7 @@ def q_pdf_extract_encrypted(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     extracted = P.extract_pdf_text(
-        P.validate_pdf_ingress(P.synth_encrypted_pdfs(docs)),
-        force_minipdf=True,
+        P.validate_pdf_ingress(P.synth_encrypted_pdfs(docs))
     )
     return extracted.select(
         F.regexp_extract("path", r"(\d+)\.pdf$", 1).cast("int").alias("bucket"),
@@ -510,7 +508,6 @@ def q_pdf_extract_passworded(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     extracted = P.extract_pdf_text(
         P.validate_pdf_ingress(P.synth_passworded_pdfs(docs)),
-        force_minipdf=True,
         password=P.ARCHIVE_PASSWORD,
     )
     doc_id = F.regexp_extract("path", r"(\d+)\.pdf$", 1).cast("long")
@@ -959,9 +956,7 @@ def q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("text"), F.lit("\nLINHA DUPLICADA\nLINHA DUPLICADA\nab")
         ).alias("text"),
     ).transform(spread)
-    extracted = P.extract_pdf_text(
-        P.validate_pdf_ingress(_synth_text_pdfs(messy)), force_minipdf=True
-    )
+    extracted = P.extract_pdf_text(P.validate_pdf_ingress(_synth_text_pdfs(messy)))
     key = F.regexp_extract("path", r"(\d+)\.pdf$", 1).cast("long")
     out = process_documents(extracted.select(key.alias("o_orderkey"), "text"))
     return out.select(

@@ -2093,15 +2093,14 @@ def q_ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     quadratically with the corpus (measured 2.68x time at 5x data — the
     vectorized cosine kernel keeps the constant small at probe scales).
     A production retrieval sizes n_cells ~ sqrt(N) via the parameterized
-    ivf_topk — MEASURED now, not on paper (round-8 ask #3,
-    tools/scaling_probe.py::ivf_sqrt_cells_probe + the
-    test_ivf_sqrt_cells_recall_gate machine gate): on clustered corpora
-    with scale-free geometry, recall at fixed n_probe holds (1.0 at both
-    scales) while candidates/query grow only ~2x at 4x data (=sqrt, vs 4x
-    brute force; SCALE.md §10). On UNIFORM vectors recall tracks the
-    probed fraction — a data property no index sizing beats, stated
-    honestly there. Here 8 cells ARE the ground-truth cluster count the
-    oracle checks against."""
+    ivf_topk — MEASURED now, not on paper (round-8 ask #3: a one-off probe
+    at N = 2,048 / 8,192, n_probe=4, k=10, recorded in SCALE.md §10b, + the
+    test_ivf_sqrt_cells_recall_gate machine gate): on clustered corpora with
+    scale-free geometry, recall at fixed n_probe holds (1.0 at both scales)
+    while candidates/query grow only ~2x at 4x data (=sqrt, vs 4x brute
+    force; SCALE.md §10). On UNIFORM vectors recall tracks the probed
+    fraction — a data property no index sizing beats, stated honestly there.
+    Here 8 cells ARE the ground-truth cluster count the oracle checks against."""
     from rpa_etl_spark.operators import similarity as S
 
     G, DIM = 8, 64

@@ -187,14 +187,14 @@ def q_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_user_totals_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin of the custom stateful streaming operators
-    (streaming/stateful.py::running_user_totals via applyInPandasWithState
-    and the transformWithStateInPandas profile variant): the FINAL state
-    both converge to is this per-user (count, decimal-exact sum). The
-    streaming tests assert stream-vs-batch equality on the same inputs;
-    this declared query gives that semantic a driver-checked oracle row.
-    One shuffle on the high-cardinality user key; state in the streaming
-    form is bounded by |active users| via processing-time timeouts.
+    """Batch twin of the custom stateful streaming operator
+    (streaming/stateful.py::running_user_totals via
+    applyInPandasWithState): the FINAL state it converges to is this
+    per-user (count, decimal-exact sum). The streaming tests assert
+    stream-vs-batch equality on the same inputs; this declared query
+    gives that semantic a driver-checked oracle row. One shuffle on the
+    high-cardinality user key; state in the streaming form is bounded by
+    |users active within its TTL| via event-time timeouts.
     """
     from pyspark.sql import functions as F
 
@@ -233,15 +233,12 @@ def q_user_totals_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_stream_session_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin of the EXPIRING-SESSION stateful operators (round-9
+    """Batch twin of the EXPIRING-SESSION stateful operator (round-9
     verdict stretch #8 — state TTL + timers): the set of sessions the
-    streaming forms emit as their state is EVICTED BY EVENT-TIME TIMER
+    streaming form emits as its state is EVICTED BY EVENT-TIME TIMER
     (streaming/stateful.py::expiring_user_sessions via
-    applyInPandasWithState EventTimeTimeout — runnable here and
-    wall-clock-eviction-tested in tests/test_streaming.py — and
-    streaming/stateful_v2.py::ExpiringUserSessions via
-    transformWithStateInPandas registerTimer/handleExpiredTimer +
-    ttlDurationMs, env-gated on protobuf). Once every watermark has
+    applyInPandasWithState EventTimeTimeout — wall-clock-eviction-tested
+    in tests/test_streaming.py). Once every watermark has
     passed, those emissions converge to exactly this batch gap
     sessionization — native session_window aggregation, with the oracle
     re-deriving sessions INDEPENDENTLY via lag + cumulative new-session

@@ -117,9 +117,13 @@ PRIORITY_ORDER = [
     #    VALIDATE/SCORE/ROUTE moved into the Arrow parse batch —
     #    kernel-consumer rule pulls it in.
     "q_pipeline_e2e",
-    # == tier C (8): r11-stale fill, in their prior relative order —
-    #    8 of the 36 r11-verdict queries fit after tiers A, B, B', D and E;
-    #    the rest sit directly below the window, oldest-first, so any
+    # == tier F (1): q_ann_ivf_trained, whose docstring now quotes the
+    #    retired IVF sizing probe's numbers instead of naming the script —
+    #    the plan-function rule pulls it in.
+    "q_ann_ivf_trained",
+    # == tier C (7): r11-stale fill, in their prior relative order —
+    #    7 of the 36 r11-verdict queries fit after tiers A, B, B', D, E and
+    #    F; the rest sit directly below the window, oldest-first, so any
     #    future rotation picks them up next.
     "q_having_large_orders",
     "q_lateral_topk",
@@ -128,10 +132,10 @@ PRIORITY_ORDER = [
     "q_hll_sketch_merge",
     "q_tfidf_terms",
     "q_histogram",
-    "q_sample_stratified",
     # ---------------- below the sampled window ----------------
-    # == r11-stale remainder (28 of 36; kernels/plans unchanged since
+    # == r11-stale remainder (29 of 36; kernels/plans unchanged since
     #    their green verdict, covered by the local 180/180 oracle sweep):
+    "q_sample_stratified",
     "q_funnel",
     "q_retention_cohort",
     "q_outlier_zscore",
@@ -219,8 +223,9 @@ PRIORITY_ORDER = [
     "q_case_routing",
     "q_decimal_math",
     # == freshest verdicts last: the entire round-14 window (all 50 green
-    #    in CORRECTNESS_r14.json) plus the three dedup singles (r12+);
-    #    their kernels are unchanged this round.
+    #    in CORRECTNESS_r14.json, less q_ann_ivf_trained, now tier F)
+    #    plus the three dedup singles (r12+); their kernels are unchanged
+    #    this round.
     "q_dedup_exact",
     "q_dedup_simhash",
     "q_dedup_ngram_jaccard",
@@ -235,7 +240,6 @@ PRIORITY_ORDER = [
     "q_table_zorder_scan",
     "q_table_time_travel",
     "q_table_schema_evolution",
-    "q_ann_ivf_trained",
     "q_ann_ivf_pq",
     "q_ann_ivf",
     "q_ann_lsh",

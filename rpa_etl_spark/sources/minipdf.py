@@ -1,8 +1,9 @@
 """Minimal pure-stdlib PDF text extractor (the S1/S2 decode kernel).
 
-The reference extracts per-page text with PyMuPDF (robot/pdf_reader.py:23-94).
-That library is not available in this container, so this module implements
-the (public, ISO 32000-1) PDF file format directly. Two extraction paths:
+The reference extracts per-page text with a third-party PDF library
+(robot/pdf_reader.py:23-94). This module implements the (public,
+ISO 32000-1) PDF file format directly instead, so the engine has one
+decoder with no native dependency. Two extraction paths:
 
 STRUCTURED (primary, round 6): a real document parser —
 - cross-reference resolution: classic ``xref`` tables (with ``/Prev``
@@ -29,7 +30,9 @@ used when the structural parse fails (damaged xref, truncated file), so
 malformed input degrades instead of erroring. Never raises: undecodable
 streams contribute no text.
 
-Deterministic: same bytes in, same text out. Encryption is out of scope.
+Deterministic: same bytes in, same text out. Encrypted files open through
+the standard security handler (RC4, AES-128, AES-256) with the empty or a
+given user password; see ``PdfDoc``.
 """
 
 from __future__ import annotations
@@ -792,7 +795,7 @@ class PdfDoc:
     the chain itself is unreadable (truncated tail, garbled ``startxref``)
     or the table parses but its offsets are wrong (incremental-save tools
     that shift bytes without rewriting the table). Both are recovered by
-    reconstruction-by-object-scan, the same strategy PyMuPDF applies
+    reconstruction-by-object-scan, the strategy mature PDF readers apply
     (reference robot/pdf_reader.py:23-58 never sees a clean-xref
     guarantee): scan the file for ``N G obj`` headers (last definition of
     an object number wins, per the incremental-update rule), recover the

@@ -1,6 +1,6 @@
 """PDF ingestion (reference parity: S1/S2/S3).
 
-Re-expresses `/root/reference/robot/pdf_reader.py:23-94` (PyMuPDF text
+Re-expresses `/root/reference/robot/pdf_reader.py:23-94` (per-page text
 extraction with page/encoding metadata) and `api/dependencies.py:12-49`
 (ingress gates: size cap, `%PDF` magic) Spark-first:
 
@@ -13,11 +13,11 @@ extraction with page/encoding metadata) and `api/dependencies.py:12-49`
 - extraction: ``mapInPandas`` over Arrow batches — one Python worker call
   per batch of documents, never per row.
 
-The decode step is REAL either way: PyMuPDF (``fitz``) when importable,
-else the built-in pure-stdlib ``minipdf`` extractor (unencrypted PDFs,
-Flate/plain content streams, simple fonts — the machine-generated invoice
-class the reference processes; see sources/minipdf.py for scope). Tests
-generate spec-conformant PDFs and round-trip them through the decode.
+The decode step is REAL and has one implementation: the built-in
+pure-stdlib ``minipdf`` extractor (Flate/plain content streams, simple
+fonts, standard encryption — the machine-generated invoice class the
+reference processes; see sources/minipdf.py for scope). Tests generate
+spec-conformant PDFs and round-trip them through the decode.
 """
 
 from __future__ import annotations
@@ -258,59 +258,23 @@ def synth_encrypted_pdfs(docs: DataFrame) -> DataFrame:
 
 
 def _extract_batch(
-    batches: Iterator[pd.DataFrame], *, force_minipdf: bool = False,
-    password: bytes | str = b"",
+    batches: Iterator[pd.DataFrame], *, password: bytes | str = b"",
 ) -> Iterator[pd.DataFrame]:
-    """Arrow-batched extraction kernel. PyMuPDF when available (full format
-    coverage), else the built-in pure-Python ``minipdf`` extractor — a real
-    decoder for the common machine-generated class (unencrypted, Flate or
-    plain content streams, simple fonts), not a fake.
-
-    ``force_minipdf`` pins the pure-Python extractor regardless of what is
-    importable — required by oracle-checked callers (q_pdf_extract), whose
-    expected text encodes minipdf's exact line-joining layout; PyMuPDF's
-    ``get_text()`` formats differently and would hash-mismatch."""
-    if force_minipdf:
-        fitz = None
-    else:
-        try:
-            import fitz  # PyMuPDF — optional; minipdf covers the common case
-        except ImportError:
-            fitz = None
-
-    if fitz is not None:
-
-        def extract(content: bytes) -> tuple[str, int, str]:
-            # per-document degrade: a locked or corrupt file must yield
-            # an empty-text row, never fail the whole Arrow batch/task
-            # (round-8 review — the minipdf path already never raises)
-            try:
-                with fitz.open(stream=content, filetype="pdf") as doc:
-                    if doc.needs_pass:
-                        pw = (
-                            password.decode()
-                            if isinstance(password, bytes)
-                            else password
-                        )
-                        if not doc.authenticate(pw):
-                            return "", doc.page_count or 1, "pymupdf"
-                    text = "\n".join(page.get_text() for page in doc)
-                    return text, doc.page_count, "pymupdf"
-            except Exception:  # noqa: BLE001 — degrade, don't fail the task
-                return "", 1, "pymupdf"
-
-    else:
-        from rpa_etl_spark.sources import minipdf
-
-        def extract(content: bytes) -> tuple[str, int, str]:
-            text, pages = minipdf.extract_text(content, password=password)
-            return text, pages, "minipdf"
+    """Arrow-batched extraction kernel over the pure-Python ``minipdf``
+    decoder: a real decoder for the machine-generated invoice class
+    (Flate or plain content streams, simple and CID fonts, RC4/AES
+    encryption; see sources/minipdf.py for scope), not a fake. It is the
+    only decoder, so ``extraction_method`` always reads ``"minipdf"`` and
+    the extracted text layout the oracles pin cannot change with what
+    happens to be installed. A document it cannot open degrades to an
+    empty-text row; it never fails the batch."""
+    from rpa_etl_spark.sources import minipdf
 
     for pdf in batches:
         rows = []
         for path, content in zip(pdf["path"], pdf["content"]):
             content = bytes(content)
-            text, pages, method = extract(content)
+            text, pages = minipdf.extract_text(content, password=password)
             rows.append(
                 {
                     "path": path,
@@ -318,28 +282,21 @@ def _extract_batch(
                     "page_count": pages,
                     "has_unicode_issues": "�" in text or "\xa0" in text,
                     "encoding": "utf-8",
-                    "extraction_method": method,
+                    "extraction_method": "minipdf",
                     "size_bytes": len(content),
                 }
             )
         yield pd.DataFrame(rows, columns=[f.name for f in PDF_EXTRACTION_SCHEMA.fields])
 
 
-def extract_pdf_text(
-    df: DataFrame, *, force_minipdf: bool = False,
-    password: bytes | str = b"",
-) -> DataFrame:
-    """S1/S2 — binary → PDFExtractionResult rows via mapInPandas. Pass
-    ``force_minipdf=True`` from oracle-checked callers (the expected text
-    encodes minipdf's exact layout; an incidentally-installed PyMuPDF
-    must not change the result). ``password``: USER password applied to
-    every encrypted document in the scan (the known-password archive
-    case, round 8); files it does not open degrade to empty text."""
+def extract_pdf_text(df: DataFrame, *, password: bytes | str = b"") -> DataFrame:
+    """S1/S2 — binary → PDFExtractionResult rows via mapInPandas.
+    ``password``: USER password applied to every encrypted document in
+    the scan (the known-password archive case, round 8); files it does
+    not open degrade to empty text."""
     import functools
 
-    kernel = functools.partial(
-        _extract_batch, force_minipdf=force_minipdf, password=password
-    )
+    kernel = functools.partial(_extract_batch, password=password)
     return df.select("path", "content").mapInPandas(
         kernel, schema=PDF_EXTRACTION_SCHEMA
     )

@@ -2,13 +2,17 @@
 
 PySpark has no mapGroupsWithState; the supported custom-state surface is
 ``applyInPandasWithState``. ``running_user_totals`` keeps one small state
-tuple per user (event count, value sum) across micro-batches and emits the
-updated running totals each batch — the streaming generalization of the
-reference's per-execution audit accumulation (orchestrator.py:118-298).
+tuple per user (event count, value sum, newest event time) across
+micro-batches and emits the updated running totals each batch — the
+streaming generalization of the reference's per-execution audit
+accumulation (orchestrator.py:118-298).
 
-State is per-key and explicitly timed out (processing-time) so the store
-stays bounded — at 100 TB of events the state size tracks |active users|,
-not |events|.
+State is per-key and expires by EVENT-TIME timeout over a watermark on
+``ts``, so the store stays bounded — at 100 TB of events the state size
+tracks |users active within the TTL|, not |events|. An event-time timeout
+also lets a bounded query end: Spark runs another no-data batch only when
+the watermark moves, whereas a processing-time timeout queues one on every
+trigger, so ``trigger(availableNow=True)`` would never terminate.
 """
 
 from __future__ import annotations
@@ -22,7 +26,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 OUTPUT_SCHEMA = "user_id long, n_events long, total_value double"
-STATE_SCHEMA = "n long, total double"
+STATE_SCHEMA = "n long, total double, last_ms long"
+STATE_TTL_MS = 3600 * 1000  # idle event time after which a user's state expires
 
 
 def _update(
@@ -32,28 +37,43 @@ def _update(
     if state.hasTimedOut:
         state.remove()
         return
-    n, total = state.get if state.exists else (0, 0.0)
+    wm = state.getCurrentWatermarkMs()
+    n, total, last_ms = state.get if state.exists else (0, 0.0, wm)
     for pdf in pdfs:
         n += len(pdf)
         total += float(pdf["value"].sum())
-    state.update((n, total))
-    state.setTimeoutDuration(3600 * 1000)
+        ts = pdf["ts"].dropna()
+        if len(ts):
+            last_ms = max(last_ms, int(ts.astype("int64").max() // 1_000_000))
+    state.update((n, total, last_ms))
+    state.setTimeoutTimestamp(max(last_ms + STATE_TTL_MS, wm + 1))
     yield pd.DataFrame(
         {"user_id": [user_id], "n_events": [n], "total_value": [total]}
     )
 
 
 def running_user_totals(events: DataFrame) -> DataFrame:
-    """Streaming: running (count, sum) per user with bounded state."""
+    """Streaming: running (count, sum) per user with bounded state.
+
+    Emits one row per user touched by a micro-batch (update mode): the
+    user's event count and value sum so far. Expiry: a user's state is
+    removed once the watermark (newest ``ts`` seen minus one hour) passes
+    the user's newest event time plus ``STATE_TTL_MS``; a later event for
+    that user starts a fresh total. Events older than the watermark are
+    dropped as late. Events with a null ``ts`` are counted; they do not
+    extend the user's event time (their state then expires relative to
+    the watermark at which they arrived). Within those bounds the totals
+    converge to the batch twin q_user_totals_state."""
     return (
-        events.select("user_id", "value")
+        events.select("user_id", "ts", "value")
+        .withWatermark("ts", "1 hour")
         .groupBy("user_id")
         .applyInPandasWithState(
             _update,
             outputStructType=OUTPUT_SCHEMA,
             stateStructType=STATE_SCHEMA,
             outputMode="update",
-            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+            timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
     )
 
@@ -169,8 +189,7 @@ def expiring_user_sessions(
     CLOSED session (append mode), state evicted by event-time timeout the
     moment the watermark passes ``last_event + gap``. State volume is
     |sessions not yet past the watermark| — bounded by the watermark
-    delay by construction, the property processing-time timeouts
-    (running_user_totals) only approximate.
+    delay by construction.
 
     ``lateness_minutes`` is the allowed-lateness knob (watermark delay),
     independent of the gap (review fix: they were coupled, so shrinking

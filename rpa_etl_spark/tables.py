@@ -120,16 +120,6 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view (for spark.sql-style plans)."""
-    for name in TABLE_NAMES:
-        load(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 def spread(df: DataFrame, *keys: str) -> DataFrame:
     """Rebalance a DataFrame to CPU parallelism ahead of a compute-bound
     stage (regex chains, hash signatures, codecs, edit distance, expand-

@@ -1,8 +1,8 @@
 """Structured-parser tests (round 6): xref streams, object streams, filter
 chains, indirect /Length, CID/ToUnicode fonts, split contents, codecs, and
 the damaged-file fallback. Reference capability: robot/pdf_reader.py:23-94
-(PyMuPDF handles arbitrary real-world PDFs — this pins the pure-Python
-parser to the same structural feature set)."""
+(the reference's PDF library handles arbitrary real-world PDFs — this pins
+the pure-Python parser to the same structural feature set)."""
 
 from __future__ import annotations
 
@@ -244,7 +244,7 @@ except ImportError:  # pragma: no cover
 
 def test_utf16be_bom_literal_and_hex_strings():
     """PDF text-string convention (§7.9.2.2): BOM-prefixed UTF-16BE show
-    strings must decode to their unicode content (PyMuPDF parity)."""
+    strings must decode to their unicode content (as full PDF readers do)."""
     txt = "Olá — 東京"
     u16 = "\xfe\xff".encode("latin-1") + txt.encode("utf-16-be")
     hexstr = u16.hex().upper().encode()

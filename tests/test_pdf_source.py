@@ -1,7 +1,7 @@
 """PDF source tests: real (minimal, spec-conformant) PDFs are generated
 in-test and round-tripped through the pure-Python minipdf extractor — the
-decode path is exercised for real, not faked. PyMuPDF, when present, takes
-over transparently (same schema)."""
+decode path is exercised for real, not faked. minipdf is the engine's only
+decoder, so every row reports ``extraction_method == "minipdf"``."""
 
 from __future__ import annotations
 
@@ -106,7 +106,7 @@ def test_pdf_pipeline_real_decode(spark, tmp_path):
         by_name["a.pdf"]["text"]
         == "conteudo do documento A\nCNPJ: 04.252.011/0001-10"
     )
-    assert by_name["a.pdf"]["extraction_method"] in ("minipdf", "pymupdf")
+    assert by_name["a.pdf"]["extraction_method"] == "minipdf"
     assert by_name["a.pdf"]["page_count"] == 1
     assert by_name["b.pdf"]["text"] == "conteudo B"
     assert by_name["a.pdf"]["has_unicode_issues"] is False
@@ -234,8 +234,7 @@ def test_q_pdf_extract_handles_messy_prefixes(spark):
     out = {
         r["doc_id"]: r
         for r in P.extract_pdf_text(
-            P.validate_pdf_ingress(P.synth_invoice_pdfs(docs)),
-            force_minipdf=True,
+            P.validate_pdf_ingress(P.synth_invoice_pdfs(docs))
         )
         .withColumn(
             "doc_id", F.regexp_extract("path", r"(\d+)\.pdf$", 1).cast("long")

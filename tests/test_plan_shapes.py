@@ -105,13 +105,38 @@ def _quadratic_joins(plan: str) -> list[str]:
     return [k for k in ("CartesianProduct", "BroadcastNestedLoopJoin") if k in plan]
 
 
+def _bnlj_build_sides(plan: str) -> list[tuple[str, ...]]:
+    """For every BroadcastNestedLoopJoin, its build child and that child's
+    first child, tree art stripped. A node's children carry their ":- " /
+    "+- " marker at the column where the node's own name starts; the
+    build side is the "+- " child for BuildRight, the ":- " for BuildLeft."""
+    lines = plan.splitlines()
+    out = []
+    for i, line in enumerate(lines):
+        m = re.search(r"BroadcastNestedLoopJoin (BuildRight|BuildLeft)", line)
+        if m:
+            marker = "+- " if m.group(1) == "BuildRight" else ":- "
+            j = next(k for k in range(i + 1, len(lines))
+                     if lines[k][m.start():m.start() + 3] == marker)
+            out.append(tuple(re.sub(r"^[ :+-]+", "", x) for x in lines[j:j + 2]))
+    return out
+
+
+def _is_segment_aggregate(build: tuple[str, ...]) -> bool:
+    """A broadcast of an aggregate grouped by c_mktsegment alone: one row
+    per market segment (5 in TPC-H), whatever the scale."""
+    return build[0].startswith("BroadcastExchange") and bool(
+        re.match(r"HashAggregate\(keys=\[c_mktsegment#\d+\], functions=\[", build[1])
+    )
+
+
 def test_no_query_plans_quadratic_joins(default_plans):
     """Global hygiene sweep: no declared query may plan a CartesianProduct
     or BroadcastNestedLoopJoin — every pair-generating operator must have
     been rewritten into an equi-join (banding/bucketing/LSH). A BNLJ that
     appears here would be quadratic at 100 TB.
 
-    Four deliberate exceptions where BNLJ IS the right plan — the nested
+    Five deliberate exceptions where BNLJ IS the right plan — the nested
     side is a tiny bounded broadcast and the corpus side streams through
     without a shuffle (cost linear in the corpus):
     - q_join_range: 5-row interval-band table (theta-join demo)
@@ -124,12 +149,24 @@ def test_no_query_plans_quadratic_joins(default_plans):
       both sides are single rows by construction, so the "nested loop" is
       1x1; splitting the string aggregate out is what lets the x6 Expand
       plan as HashAggregate instead of two full SortAggregate passes)
+    - q_scalar_subquery: the decorrelated scalar subquery's LeftSingle
+      join against the per-segment average (an aggregate grouped by
+      c_mktsegment — at most 5 rows). Spark plans it as a hash join at
+      sf0.001 and as a BNLJ at sf0.01; either way each order row meets at
+      most 5 build rows. Only that build side is exempt: every BNLJ in
+      the query must broadcast the c_mktsegment aggregate, and it may
+      plan no CartesianProduct.
     """
     allowed_bnlj = {
         "q_join_range", "q_sim_topk", "q_pagerank_dangling", "q_profile_stats",
+        "q_scalar_subquery",
     }
     offenders = _offenders(default_plans, _quadratic_joins, allowed_bnlj)
     assert not offenders, f"quadratic join shapes: {offenders}"
+    plan = default_plans["q_scalar_subquery"]
+    assert "CartesianProduct" not in plan
+    builds = _bnlj_build_sides(plan)
+    assert all(_is_segment_aggregate(b) for b in builds), builds
 
 
 @pytest.mark.parametrize(
@@ -139,6 +176,23 @@ def test_quadratic_join_rule_flags_non_equi_join(spark, how, kind):
     a, b = spark.range(100).toDF("a"), spark.range(100).toDF("b")
     with _broadcast_off(spark):
         assert _quadratic_joins(_executed(a.join(b, a.a < b.b, how))) == [kind]
+
+
+def test_segment_aggregate_rule_names_only_that_build_side(spark, sf_dir):
+    """The q_scalar_subquery exemption's check: a BNLJ over a broadcast
+    c_mktsegment aggregate passes; a BNLJ over any other build side fails."""
+    orders = load(spark, sf_dir, "orders")
+    seg = load(spark, sf_dir, "customer").groupBy("c_mktsegment").agg(
+        F.avg("c_acctbal").alias("m"))
+    a, b = spark.range(100).toDF("a"), spark.range(100).toDF("b")
+    with _broadcast_off(spark):
+        over_segments = _executed(  # coalesce: no isnotnull(m) filter above the aggregate
+            orders.join(seg, orders.o_totalprice > F.coalesce(seg.m, F.lit(0.0)), "left"))
+        over_range = _executed(a.join(b, a.a < b.b, "left"))
+    builds = _bnlj_build_sides(over_segments)
+    assert len(builds) == 1 and _is_segment_aggregate(builds[0]), builds
+    builds = _bnlj_build_sides(over_range)
+    assert len(builds) == 1 and not _is_segment_aggregate(builds[0]), builds
 
 
 def _unpartitioned_window_specs(plan: str) -> list[str]:

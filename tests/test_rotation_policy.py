@@ -129,7 +129,6 @@ KERNEL_CONSUMERS: dict[str, list[str]] = {
         "q_stream_dedup", "q_stream_interval_join", "q_audit_events",
     ],
     "rpa_etl_spark/streaming/stateful.py": ["q_user_totals_state", "q_stream_session_ttl"],
-    "rpa_etl_spark/streaming/stateful_v2.py": ["q_user_totals_state", "q_stream_session_ttl"],
     "rpa_etl_spark/pipeline.py": ["q_pipeline_e2e"],
     "rpa_etl_spark/tables.py": ["q_flagship", "q_scan_project"],
     "rpa_etl_spark/session.py": [],  # config only; every query exercises it

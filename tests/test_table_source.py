@@ -106,7 +106,7 @@ def test_streaming_source_exactly_once_with_restart(spark, tmp_path):
             .option("path", sink).option("checkpointLocation", ckpt)
             .trigger(availableNow=True).start()
         )
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
 
     run_available()
     got = spark.read.parquet(sink)
@@ -178,7 +178,7 @@ def test_streaming_source_rename_streams_new_name(spark, tmp_path):
         .option("checkpointLocation", str(tmp_path / "c"))
         .trigger(availableNow=True).start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     rows = {r["id"]: r["w"] for r in spark.read.parquet(sink).collect()}
     assert rows == {i: i * 3 for i in range(6)}
 
@@ -379,7 +379,7 @@ def test_native_stream_writer_exactly_once(spark, tmp_path):
         .option("path", dst).option("checkpointLocation", ckpt)
         .trigger(availableNow=True).start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     assert sorted(r["id"] for r in TF.snapshot_read(spark, dst).collect()) \
         == list(range(5))
     head = TF.current_version(dst)
@@ -390,7 +390,7 @@ def test_native_stream_writer_exactly_once(spark, tmp_path):
         .option("path", dst).option("checkpointLocation", ckpt)
         .trigger(availableNow=True).start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     assert TF.current_version(dst) == head
     # direct replay of batch 0 through the writer: txn guard drops it
     # and removes the duplicate shards

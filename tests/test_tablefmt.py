@@ -903,7 +903,7 @@ def test_streaming_append_sink_exactly_once(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     n = TF.snapshot_read(spark, table).count()
     assert n == 20
     # replay batch 0 by hand — recovery redelivers, the table must not move
