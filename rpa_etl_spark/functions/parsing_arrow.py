@@ -2,8 +2,8 @@
 
 Same semantics as :mod:`rpa_etl_spark.functions.parsing` (reference
 `/root/reference/robot/core/parser.py` — scans :12-14,78-128, blocks
-:134-208, extractors :214-319, composition :321-379), implemented as a
-``mapInPandas`` kernel instead of column expressions.
+:134-208, extractors :214-319, composition :321-379), implemented as an
+Arrow-batched pandas kernel instead of column expressions.
 
 Why both exist: the column-expression form is the general building block —
 it composes into any plan and its validators run inside whole-stage
@@ -22,11 +22,25 @@ synthetic corpus, the reference's golden fixtures, and degenerate inputs.
 Java-vs-Python regex note: patterns are rewritten with explicit ASCII
 classes (``[0-9]``, ``[ \\t\\n\\x0B\\f\\r]``) so Python's unicode-aware
 ``\\d``/``\\s`` can't diverge from the Java regexes the column form runs.
+The normalize twin (:func:`_normalize`, of ``functions/text.normalize_text``)
+needs three more emulations, each pinned by tests/test_text_functions.py:
+
+- ``text.normalize_whitespace``'s class ``[ \\t\\f<VT>]`` holds a literal
+  vertical-tab byte, so VT collapses to a space too;
+- Java's ``$`` (no MULTILINE) also matches before a final line terminator,
+  and Java's terminators include ``\\x85``, ``\\u2028`` and ``\\u2029``,
+  which ``\\s`` does not: ``"NOTA 123 \\x85"`` trims to ``"NOTA 123\\x85"``;
+- JDK 17's ``\\b`` counts every Unicode letter or digit, ``_`` and a
+  non-spacing mark as a word character, but not ``²``: ``"1.500é"`` keeps
+  its thousands dot, ``"1.500²"`` loses it. Python's ``\\b`` would keep both.
+
+Spark's ``trim`` strips spaces (U+0020) only, hence ``strip(" ")``.
 """
 
 from __future__ import annotations
 
 import re
+import unicodedata
 from decimal import Decimal, InvalidOperation
 
 import pandas as pd
@@ -44,6 +58,7 @@ from rpa_etl_spark.functions.parsing import (
     ITEM_SKIP_KEYWORDS,
     PARTY_STOP_TOKENS,
 )
+from rpa_etl_spark.functions.text import KEEP_SHORT_TOKENS
 
 _D = "[0-9]"  # Java \d
 _S = "[ \\t\\n\\x0B\\f\\r]"  # Java \s
@@ -69,9 +84,58 @@ _NOISE_LINE_RE = re.compile(f"^[{_S[1:-1]}{_D[1:-1]}./-]*$")
 _WS_RUN_RE = re.compile(f"{_S}+")
 _TRAIL_PUNCT_RE = re.compile(r"[.\-,]+$")
 _NON_DIGIT_RE = re.compile("[^0-9]")
+_DIGIT_RE = re.compile(_D)
 _MONEY_STRIP_RE = re.compile(r"[^\d,.\-]", re.ASCII)
 
 _STOP_SET = set(PARTY_STOP_TOKENS)
+
+# normalize twin (text.normalize_text, P1-P8): the Column chain's patterns
+# in order, with Java's \s, \d, $ and \b spelled out
+_HSPACE_RUN_RE = re.compile("[ \t\f\x0b]+")
+_NL_RUN_RE = re.compile("\n{2,}")
+_EDGE_WS_RE = re.compile(f"^{_S}+|{_S}+(?=[\n\r\x85\u2028\u2029]?\\Z)")
+_DIGIT_GAP_RE = re.compile(f"(?<={_D}){_S}+(?={_D})")
+_DATE_TIME_RE = re.compile(f"({_D}{{2}}/{_D}{{2}}/{_D}{{4}})({_D}{{2}}:{_D}{{2}}:{_D}{{2}})")
+_DECIMAL_COMMA_RE = re.compile(f"({_D}){_S}*,{_S}*({_D}{{2}})")
+_THOUSANDS_DOT_RE = re.compile(f"(?<={_D}){_S}*\\.{_S}*(?={_D}{{3}})")
+_KEEP_SHORT = frozenset(KEEP_SHORT_TOKENS)
+
+
+def _java_word(ch: str) -> bool:
+    """JDK 17 ``\\b``'s word test for a character right after a digit:
+    ``Character.isLetterOrDigit``, ``_``, or a non-spacing mark (its base
+    is the digit)."""
+    cat = unicodedata.category(ch)
+    return ch == "_" or cat == "Nd" or cat == "Mn" or cat[0] == "L"
+
+
+def _drop_thousands_dot(m: re.Match) -> str:
+    after = m.end() + 3  # the lookahead's three digits
+    s = m.string
+    return m.group(0) if after < len(s) and _java_word(s[after]) else ""
+
+
+def _normalize(text: str | None) -> str | None:
+    """text.normalize_text in Python, byte for byte: scrub, whitespace,
+    digit join, date spacing, decimal commas, then the per-line noise
+    filter, trim and order-preserving dedup."""
+    if text is None:
+        return None
+    c = text.replace("\u00a0", " ").replace("\u200b", "").replace("\r\n", "\n")
+    c = _HSPACE_RUN_RE.sub(" ", c)
+    c = _NL_RUN_RE.sub("\n\n", c)
+    c = _EDGE_WS_RE.sub("", c)
+    c = _DIGIT_GAP_RE.sub("", c)
+    c = _DATE_TIME_RE.sub(r"\1 \2", c)
+    c = _DECIMAL_COMMA_RE.sub(r"\1,\2", c)
+    c = _THOUSANDS_DOT_RE.sub(_drop_thousands_dot, c)
+    out: dict[str, None] = {}
+    for line in c.split("\n"):
+        t = line.strip(" ")
+        if len(t) >= 3 or t.upper() in _KEEP_SHORT or _DIGIT_RE.search(t):
+            out.setdefault(t)
+    return "\n".join(out)
+
 
 _CNPJ_W1 = [5, 4, 3, 2, 9, 8, 7, 6, 5, 4, 3, 2]
 _CNPJ_W2 = [6, 5, 4, 3, 2, 9, 8, 7, 6, 5, 4, 3, 2]

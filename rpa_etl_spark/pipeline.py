@@ -8,13 +8,28 @@ content hashes, reduction metrics). Each reference stage maps to a narrow
 section of ONE fused Spark pass — no shuffle anywhere in the pipeline, so
 it scales linearly with the corpus:
 
-    READ      → caller provides text, or sources/pdf.pdf_pipeline output
-                (extracted in one task per core; more on a large corpus)
-    NORMALIZE → functions/text.normalize_text  (+ hash & reduction ratio)
-    PARSE     → functions/parsing_arrow._parse_one (B1-B5)   ┐ one Arrow
-    VALIDATE  → _judge: V2/V3/V4 checks → issues array       │ batch: one
-    SCORE     → _judge: trust score + status (O2/O3)         │ ArrowEvalPython,
-    ROUTE     → _judge: R1/R2 threshold + confidence routing ┘ one runner/task
+    READ      → caller provides text, or sources/pdf.pdf_pipeline    ┐
+                output: its extraction UDF (one task per core)       │ one Arrow
+    NORMALIZE → functions/parsing_arrow._normalize                   │ batch: one
+    PARSE     → functions/parsing_arrow._parse_one (B1-B5)           │ ArrowEvalPython,
+    VALIDATE  → _judge: V2/V3/V4 checks → issues array               │ one runner
+    SCORE     → _judge: trust score + status (O2/O3)                 │ per task
+    ROUTE     → _judge: R1/R2 threshold + confidence routing         ┘
+    then, JVM-side: the raw/normalized hashes and the reduction ratio
+
+READ joins the runner only for an unchanged ``pdf_pipeline`` (or
+``extract_pdf_text``) result: the document UDF `_doc` then takes the
+extraction UDF's struct as its one argument, and Spark chains a UDF whose
+only child is a UDF into one node (``_doc(_extract(path, content))``).
+The extraction fields pass through `_doc`'s output, so the PDFs are
+decoded once. Any other input feeds `_doc` the raw text column.
+
+Why NORMALIZE runs in the batch: the text is already in the worker, and
+the Column ``functions/text.normalize_text`` chain's filter/aggregate
+lambdas are interpreted; as a JVM stage between the two UDFs it also
+forced a second Python runner per task. The Python twin is byte-identical
+to the Column form (tests/test_text_functions.py), which stays for the
+declared queries.
 
 Why VALIDATE/SCORE/ROUTE run in the parse batch: the kernel already holds
 every parsed field in Python, beside its twins of the validators. As Column
@@ -37,8 +52,8 @@ from pyspark.sql.types import ArrayType, DecimalType, StringType, StructField, S
 
 from rpa_etl_spark.functions import parsing_arrow as PA
 from rpa_etl_spark.functions import scoring as S
-from rpa_etl_spark.functions import text as T
 from rpa_etl_spark.functions.exprs import col_memo
+from rpa_etl_spark.sources.pdf import PDF_EXTRACTION_SCHEMA, extraction_column
 
 AUDIT_THRESHOLD = 10_000.0  # R1 — tests/e2e/test_pipeline_core.py:177
 
@@ -93,33 +108,50 @@ _JUDGED_FIELDS = [
     StructField("status", StringType()),
     StructField("route", StringType()),
 ]
-_DOC_NAMES = PA._PARSED_NAMES + [f.name for f in _JUDGED_FIELDS]
+_DOC_FIELDS = [StructField("normalized_text", StringType())] + PA._PARSED_FIELDS + _JUDGED_FIELDS
+_DOC_NAMES = [f.name for f in _DOC_FIELDS]
 
 
-@F.pandas_udf(StructType(PA._PARSED_FIELDS + _JUDGED_FIELDS))
-def _parse_and_judge_udf(texts: pd.Series) -> pd.DataFrame:
-    docs = [(p := PA._parse_one(t)) | _judge(p) for t in texts]
-    return pd.DataFrame({n: [d[n] for d in docs] for n in _DOC_NAMES})
+def _doc(x):
+    """NORMALIZE → PARSE → VALIDATE/SCORE/ROUTE for one Arrow batch. ``x``
+    is a raw-text Series (`_doc_udf`), or the extraction struct frame
+    straight from the PDF extraction UDF (`_extracted_doc_udf`), whose
+    fields pass through ahead of the document fields."""
+    texts = x["text"] if isinstance(x, pd.DataFrame) else x
+    docs = []
+    for t in texts:
+        norm = PA._normalize(t)
+        parsed = PA._parse_one(norm)
+        docs.append({"normalized_text": norm} | parsed | _judge(parsed))
+    out = pd.DataFrame({n: [d[n] for d in docs] for n in _DOC_NAMES})
+    if isinstance(x, pd.DataFrame):
+        out = pd.concat([x.reset_index(drop=True), out], axis=1)
+    return out
+
+
+_doc_udf = F.pandas_udf(_doc, StructType(_DOC_FIELDS))
+_extracted_doc_udf = F.pandas_udf(_doc, StructType(PDF_EXTRACTION_SCHEMA.fields + _DOC_FIELDS))
 
 
 @col_memo
-def _static_cols(text_col: str):
-    """The NORMALIZE Column trees (normalized text, hashes, reduction
-    ratio), built once per raw-text column name: an unresolved Column is an
-    immutable expression, so reuse across plans is `re.compile` reuse.
-    col_memo scopes the cache to the live py4j gateway (no dead refs)."""
-    normalize = {
-        "raw_sha256": F.sha2(F.col(text_col), 256),
-        "normalized_text": T.normalize_text(F.col(text_col)),
-    }
-    post_norm = {
-        "norm_sha256": F.sha2(F.col("normalized_text"), 256),
+def _static_cols(text: str) -> dict:
+    """The output Columns after the input's, by name: the O1 hashes and O5
+    reduction ratio over the raw text (column or struct field ``text``)
+    and the document struct's normalized text, then the document fields.
+    Built once per raw-text name: an unresolved Column is an immutable
+    expression, so reuse across plans is `re.compile` reuse. col_memo
+    scopes the cache to the live py4j gateway (no dead refs)."""
+    norm = F.col("_doc.normalized_text")
+    return {
+        "raw_sha256": F.sha2(F.col(text), 256),
+        "normalized_text": norm,
+        "norm_sha256": F.sha2(norm, 256),
         "reduction_ratio": F.when(
-            F.length(text_col) > 0,
-            F.round(F.lit(1) - F.length("normalized_text") / F.length(text_col), 2),
+            F.length(text) > 0,
+            F.round(F.lit(1) - F.length(norm) / F.length(text), 2),
         ).otherwise(F.lit(0.0)),
+        **{f.name: F.col("_doc")[f.name] for f in PA._PARSED_FIELDS + _JUDGED_FIELDS},
     }
-    return normalize, post_norm
 
 
 def process_documents(df: DataFrame, text_col: str = "text",
@@ -131,18 +163,30 @@ def process_documents(df: DataFrame, text_col: str = "text",
     ``raw_sha256, normalized_text, norm_sha256, reduction_ratio,
     emission_date, competence_date, chave_acesso, issuer, recipient,
     items, total, validation_issues, trust_score, status, route``.
-    Every added column is nullable but the default ``tenant_id``. The judged
-    ones (``validation_issues``, ``status``, ``route``) come from a pandas-UDF
-    struct, which Spark marks nullable, though no value is ever null;
-    tests/test_pipeline_e2e.py pins the whole schema.
+    An input column of one of those names is replaced in place. Every
+    added column is nullable but the default ``tenant_id``. The
+    document fields come from a pandas-UDF struct, which Spark marks
+    nullable, though ``validation_issues``, ``status`` and ``route`` are
+    never null; tests/test_pipeline_e2e.py pins the whole schema.
+
+    Given an unchanged ``sources/pdf.extract_pdf_text`` or ``pdf_pipeline``
+    result, the document UDF is applied to the extraction UDF's own
+    output, so Spark chains the two into one ``ArrowEvalPython``: one
+    Python runner per task, one Arrow round trip. Any other input,
+    including a cached or persisted extraction result (whose rows then
+    come from the cache), feeds the same kernel its ``text_col``.
     """
-    normalize, post_norm = _static_cols(text_col)
-    # NORMALIZE (P8 chain) + O1 hashes + O5 reduction ratio
-    df = df.withColumns(dict(normalize)).withColumns(dict(post_norm))
-    # PARSE (B1-B5, q_parse_invoice's kernel) + VALIDATE/SCORE/ROUTE
-    # (_judge): one struct-returning vectorized UDF over the normalized text
-    df = df.withColumn("_doc", _parse_and_judge_udf(F.col("normalized_text")))
-    df = df.select("*", *[F.col("_doc")[n].alias(n) for n in _DOC_NAMES]).drop("_doc")
+    chained = extraction_column(df) if text_col == "text" else None
+    if chained is None:
+        df, text, head = df.withColumn("_doc", _doc_udf(F.col(text_col))), text_col, {}
+    else:
+        # the extraction fields come back through the document struct, so
+        # the extraction UDF appears once in the plan
+        inp, extracted = chained
+        df, text = inp.select(_extracted_doc_udf(extracted).alias("_doc")), "_doc.text"
+        head = {n: F.col("_doc")[n] for n in PDF_EXTRACTION_SCHEMA.names}
+    # withColumns: an input column named like an output one is replaced
+    df = df.withColumns(head | _static_cols(text)).drop("_doc")
     if tenant_col is None:
         df = df.withColumn("tenant_id", F.lit("unknown_tenant"))
     elif tenant_col != "tenant_id":

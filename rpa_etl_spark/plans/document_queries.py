@@ -283,7 +283,7 @@ def q_pdf_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents table — a writer/parser layout bug (stream offsets, escape
     handling, page order, Flate framing) cannot round-trip past the
     comparison. Plan: scan → spread (one CPU-sizing exchange, see
-    tables.spread) → mapInPandas(write) → filter → mapInPandas(extract) —
+    tables.spread) → mapInPandas(write) → filter → pandas UDF(extract) —
     otherwise narrow end to end; no keyed shuffle at any scale."""
     from rpa_etl_spark.sources import pdf as P
 
@@ -362,7 +362,7 @@ def q_pdf_extract_hard(spark: SparkSession, sf_dir: str) -> DataFrame:
     every layout back to the SAME analytic text the oracle reconstructs
     from the documents table — a single xref/filter/CMap/salvage bug
     hash-mismatches. Plan shape identical to q_pdf_extract: scan →
-    spread → mapInPandas(write) → filter → mapInPandas(extract); narrow
+    spread → mapInPandas(write) → filter → pandas UDF(extract); narrow
     end to end, no keyed shuffle at any scale."""
     from rpa_etl_spark.sources import pdf as P
 
@@ -425,7 +425,7 @@ def q_pdf_extract_encrypted(spark: SparkSession, sf_dir: str) -> DataFrame:
     file's text analytically with an ordered string_agg, so a wrong page
     order, dropped page, or decryption defect hash-mismatches. Plan: scan
     → filter (48 rows) → ONE fixture-sized keyed shuffle (groupBy bucket,
-    6 groups) → applyInPandas(write) → mapInPandas(extract); the shuffle
+    6 groups) → applyInPandas(write) → pandas UDF(extract); the shuffle
     is over the fixture rows only — corpus-size-independent — and the six
     reader KDF runs execute in parallel, one per task. Reference parity:
     the reference's PDF library opens AES-256 files natively
@@ -495,7 +495,7 @@ def q_pdf_extract_passworded(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture is bounded (doc_id < 96) like q_pdf_extract_encrypted: the
     capability is per-document decryption, not corpus-scale throughput —
     that is q_pdf_extract_hard's job. Plan: scan → filter → spread →
-    mapInPandas(write) → mapInPandas(extract+decrypt); narrow, no keyed
+    mapInPandas(write) → pandas UDF(extract+decrypt); narrow, no keyed
     shuffle. Owner-password recovery is deliberately unsupported
     (minipdf._setup_encryption's docstring states why)."""
     from rpa_etl_spark.sources import pdf as P
@@ -944,8 +944,9 @@ def q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-mismatches. Bounded corpus (o_orderkey < 1000) like the other
     file-capability fixtures; corpus-scale throughput is covered by
     q_pdf_extract_hard + q_parse_invoice. Plan: one narrow chain —
-    scan → spread → mapInPandas(write) → mapInPandas(extract) → fused
-    column pipeline; no shuffle anywhere, scan-speed at 100 TB."""
+    scan → spread → mapInPandas(write) → pandas UDF(extract) → document
+    pandas UDF (normalize, parse, judge) → JVM hashes; no shuffle
+    anywhere, scan-speed at 100 TB."""
     from rpa_etl_spark.pipeline import process_documents
     from rpa_etl_spark.sources import pdf as P
 

@@ -10,8 +10,12 @@ extraction with page/encoding metadata) and `api/dependencies.py:12-49`
   file index where possible);
 - sizing (``pdf_pipeline``): the scan is coalesced to one task per core,
   or more when the corpus exceeds ``maxPartitionBytes`` per task;
-- extraction: ``mapInPandas`` over Arrow batches — one Python worker call
-  per batch of documents, never per row.
+- extraction: a struct-returning scalar pandas UDF over ``path, content``
+  (`_extract_udf`) — one Python call per Arrow batch of documents, never
+  per row. ``pipeline.process_documents`` applies its document UDF to this
+  UDF's output when given an unchanged ``extract_pdf_text``/``pdf_pipeline``
+  result, so extract, normalize, parse and judge share one Python runner
+  per task (one ``ArrowEvalPython``).
 
 The decode step is REAL and has one implementation: the built-in
 pure-stdlib ``minipdf`` extractor (Flate/plain content streams, simple
@@ -22,10 +26,13 @@ spec-conformant PDFs and round-trip them through the decode.
 
 from __future__ import annotations
 
+import functools
+import weakref
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
@@ -257,49 +264,64 @@ def synth_encrypted_pdfs(docs: DataFrame) -> DataFrame:
     )
 
 
-def _extract_batch(
-    batches: Iterator[pd.DataFrame], *, password: bytes | str = b"",
-) -> Iterator[pd.DataFrame]:
-    """Arrow-batched extraction kernel over the pure-Python ``minipdf``
-    decoder: a real decoder for the machine-generated invoice class
-    (Flate or plain content streams, simple and CID fonts, RC4/AES
-    encryption; see sources/minipdf.py for scope), not a fake. It is the
-    only decoder, so ``extraction_method`` always reads ``"minipdf"`` and
-    the extracted text layout the oracles pin cannot change with what
-    happens to be installed. A document it cannot open degrades to an
-    empty-text row; it never fails the batch."""
-    from rpa_etl_spark.sources import minipdf
+@functools.cache
+def _extract_udf(password: bytes | str):
+    """The extraction kernel as a struct-returning scalar pandas UDF over
+    ``(path, content)``, one per password (built once, then reused). It
+    decodes with the pure-Python ``minipdf`` decoder: a real decoder for
+    the machine-generated invoice class (Flate or plain content streams,
+    simple and CID fonts, RC4/AES encryption; see sources/minipdf.py for
+    scope), not a fake. It is the only decoder, so ``extraction_method``
+    always reads ``"minipdf"`` and the extracted text layout the oracles
+    pin cannot change with what happens to be installed. A document it
+    cannot open degrades to an empty-text row; it never fails the batch."""
 
-    for pdf in batches:
+    def _extract(paths, contents):
+        from rpa_etl_spark.sources import minipdf
+
         rows = []
-        for path, content in zip(pdf["path"], pdf["content"]):
+        for path, content in zip(paths, contents):
             content = bytes(content)
             text, pages = minipdf.extract_text(content, password=password)
             rows.append(
-                {
-                    "path": path,
-                    "text": text,
-                    "page_count": pages,
-                    "has_unicode_issues": "�" in text or "\xa0" in text,
-                    "encoding": "utf-8",
-                    "extraction_method": "minipdf",
-                    "size_bytes": len(content),
-                }
+                (path, text, pages, "\ufffd" in text or "\xa0" in text,
+                 "utf-8", "minipdf", len(content))
             )
-        yield pd.DataFrame(rows, columns=[f.name for f in PDF_EXTRACTION_SCHEMA.fields])
+        return pd.DataFrame(rows, columns=PDF_EXTRACTION_SCHEMA.names)
+
+    return F.pandas_udf(_extract, PDF_EXTRACTION_SCHEMA)
+
+
+# extract_pdf_text output -> (its input, its extraction Column), by
+# identity: what process_documents needs to chain its document UDF onto the
+# extraction UDF. Any further transformation is a new DataFrame, absent
+# from the map.
+_EXTRACTED: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def extract_pdf_text(df: DataFrame, *, password: bytes | str = b"") -> DataFrame:
-    """S1/S2 — binary → PDFExtractionResult rows via mapInPandas.
-    ``password``: USER password applied to every encrypted document in
-    the scan (the known-password archive case, round 8); files it does
-    not open degrade to empty text."""
-    import functools
+    """S1/S2 — binary → PDFExtractionResult rows: one struct-returning
+    scalar pandas UDF (`_extract_udf`) over ``path, content``, evaluated
+    once per Arrow batch in one ``ArrowEvalPython``. ``password``: USER
+    password applied to every encrypted document in the scan (the
+    known-password archive case, round 8); files it does not open degrade
+    to empty text. ``pipeline.process_documents`` given this DataFrame
+    unchanged feeds the extraction struct straight into its document UDF
+    (`extraction_column`), so both run in one Python runner per task."""
+    extracted = _extract_udf(password)("path", "content")
+    out = df.select(extracted.alias("_x")).select("_x.*")
+    _EXTRACTED[out] = (df, extracted)
+    return out
 
-    kernel = functools.partial(_extract_batch, password=password)
-    return df.select("path", "content").mapInPandas(
-        kernel, schema=PDF_EXTRACTION_SCHEMA
-    )
+
+def extraction_column(df: DataFrame) -> tuple[DataFrame, Column] | None:
+    """``(input, extraction Column)`` when ``df`` is an unchanged
+    ``extract_pdf_text`` result, else ``None``: the struct Column
+    evaluates over ``input`` to the rows ``df`` holds. A cached or
+    persisted result (its plan in the cache manager, however it got there)
+    also reads ``None``: its rows come from the cache, not a new decode."""
+    hit = _EXTRACTED.get(df)
+    return hit if hit is not None and df.storageLevel == StorageLevel.NONE else None
 
 
 def _core_sized(scan: DataFrame) -> DataFrame:
@@ -319,7 +341,10 @@ def _core_sized(scan: DataFrame) -> DataFrame:
 
 def pdf_pipeline(spark: SparkSession, path_glob: str) -> DataFrame:
     """scan → core-sized tasks (`_core_sized`) → ingress gates →
-    Arrow-batched extraction (one narrow chain, one stage)."""
+    Arrow-batched extraction (one narrow chain, one stage). Pass the result
+    unchanged to ``pipeline.process_documents`` to run the document chain
+    in the extraction's Python runner; a transformed or cached result is a
+    text input like any other."""
     scan = _core_sized(read_pdf_files(spark, path_glob))
     return extract_pdf_text(validate_pdf_ingress(scan))
 

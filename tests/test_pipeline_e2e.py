@@ -176,3 +176,74 @@ def test_pipeline_output_schema_is_pinned(spark):
     df = spark.createDataFrame([], "doc_id long, text string")
     assert [_field(f) for f in process_documents(df).schema.fields] == PIPELINE_SCHEMA
 
+
+def test_chained_and_text_routes_agree(spark, tmp_path):
+    """`process_documents` chains its document UDF onto an unchanged
+    `pdf_pipeline` result and feeds it the text column otherwise. On one
+    corpus — Flate and plain invoices, a non-PDF `.pdf` and a truncated PDF
+    that extracts to empty text — both routes give the same rows, the
+    pinned schema after the extraction columns, and the same observed
+    metrics."""
+    from rpa_etl_spark.pipeline import process_documents_with_metrics
+    from rpa_etl_spark.sources import minipdf
+    from rpa_etl_spark.sources.pdf import PDF_EXTRACTION_SCHEMA, pdf_pipeline
+
+    rich = GOLDEN.replace("R$ 4.450,00", "R$ 44.500,00")
+    for name, text, compress in [("flate", GOLDEN, True), ("plain", NOISY_GOLDEN, False),
+                                 ("rich", rich, True)]:
+        (tmp_path / f"{name}.pdf").write_bytes(minipdf.write_pdf([text.split("\n")], compress))
+    (tmp_path / "zip.pdf").write_bytes(b"PK\x03\x04 not a pdf")
+    (tmp_path / "cut.pdf").write_bytes(minipdf.write_pdf([["TOTAL: R$ 1,00"]])[:24])
+    d = str(tmp_path)
+
+    chained = process_documents(pdf_pipeline(spark, d))
+    text = process_documents(pdf_pipeline(spark, d).select("*"))
+    schema = [_field(f) for f in chained.schema.fields]
+    assert schema == [_field(f) for f in text.schema.fields]
+    assert schema == [_field(f) for f in PDF_EXTRACTION_SCHEMA.fields] + PIPELINE_SCHEMA[2:]
+    rows = sorted(chained.collect())
+    assert rows == sorted(text.collect())
+    assert [r["path"].rsplit("/", 1)[1] for r in rows] == [
+        "cut.pdf", "flate.pdf", "plain.pdf", "rich.pdf"]
+    assert rows[0]["text"] == "" and rows[0]["route"] == "revisao_manual"
+    assert [r["route"] for r in rows[1:]] == [
+        "processamento_normal", "processamento_normal", "auditoria_fiscal"]
+
+    metrics = []
+    for df in (pdf_pipeline(spark, d), pdf_pipeline(spark, d).select("*")):
+        observed, obs = process_documents_with_metrics(df)
+        observed.collect()
+        metrics.append(obs.get)
+    assert metrics[0] == metrics[1] and metrics[0]["n_docs"] == 4
+
+
+def test_cached_extraction_is_read_from_the_cache(spark, tmp_path):
+    """A cached `pdf_pipeline` result is not chained: `process_documents`
+    reads its rows from the cache, so a file deleted after caching still
+    comes through (a re-decode would fail on the missing file)."""
+    from rpa_etl_spark.sources import minipdf
+    from rpa_etl_spark.sources.pdf import pdf_pipeline
+
+    for name in ("a", "b"):
+        (tmp_path / f"{name}.pdf").write_bytes(minipdf.write_pdf([GOLDEN.split("\n")]))
+    extracted = pdf_pipeline(spark, str(tmp_path)).cache()
+    try:
+        assert extracted.count() == 2
+        (tmp_path / "b.pdf").unlink()
+        rows = process_documents(extracted).collect()
+    finally:
+        extracted.unpersist()
+    assert sorted(r["path"].rsplit("/", 1)[1] for r in rows) == ["a.pdf", "b.pdf"]
+    assert {r["total"] for r in rows} == {"4.450,00"}
+
+
+def test_reprocessing_replaces_same_named_columns(spark):
+    """Pipeline output fed back in (on its raw or its normalized text)
+    keeps one column per name: the added columns replace the input's."""
+    df = spark.createDataFrame([(0, NOISY_GOLDEN)], "doc_id long, text string")
+    once = process_documents(df)
+    for text_col in ("text", "normalized_text"):
+        again = process_documents(once, text_col=text_col)
+        assert again.columns == once.columns
+        row = again.select("total", "route").first()
+        assert (row["total"], row["route"]) == ("4.450,00", "processamento_normal")

@@ -493,31 +493,29 @@ def test_aqe_skew_join_splits_hot_partition(spark):
     assert "skewed" in plan  # the AQEShuffleRead over the hot side
 
 
-def _plan_nodes(node, above=()):
-    """Every node of a physical plan, with the nodes above it."""
-    yield node, above
+def _plan_nodes(node):
+    """Every node of a physical plan."""
+    yield node
     kids = node.children()
     for i in range(kids.size()):
-        yield from _plan_nodes(kids.apply(i), (*above, node))
+        yield from _plan_nodes(kids.apply(i))
 
 
 def _pipeline_python_violations(df) -> list[str]:
-    """The document pipeline's Python nodes: one MapInPandas (extract), one
-    ArrowEvalPython (parse + validate/score/route), and no higher-order
-    lambda in a Project above the ArrowEvalPython — such a lambda is
-    judging work left to the JVM after the parse batch."""
+    """The document pipeline's Python nodes: exactly one ArrowEvalPython
+    (PDF extraction chained into normalize + parse + validate/score/route,
+    one Python runner per task), no MapInPandas, and no higher-order lambda
+    in any JVM Project — such a lambda is document work (normalizing,
+    judging) left to the JVM's interpreted expression walker."""
     nodes = list(_plan_nodes(df._jdf.queryExecution().executedPlan()))
-    names = [n.nodeName() for n, _ in nodes]
-    bad = [f"{k} x{names.count(k)}" for k in ("MapInPandas", "ArrowEvalPython")
-           if names.count(k) != 1]
-    for node, above in nodes:
-        if node.nodeName() != "ArrowEvalPython":
-            continue
-        for proj in (a for a in above if a.nodeName() == "Project"):
-            exprs = proj.expressions()
-            bad += [f"lambda above ArrowEvalPython: {e.toString()[:200]}"
-                    for e in (exprs.apply(i) for i in range(exprs.size()))
-                    if "lambdafunction" in e.toString()]
+    names = [n.nodeName() for n in nodes]
+    bad = [f"{k} x{names.count(k)}" for k, want in (("MapInPandas", 0), ("ArrowEvalPython", 1))
+           if names.count(k) != want]
+    for proj in (n for n in nodes if n.nodeName() == "Project"):
+        exprs = proj.expressions()
+        bad += [f"lambda in Project: {e.toString()[:200]}"
+                for e in (exprs.apply(i) for i in range(exprs.size()))
+                if "lambdafunction" in e.toString()]
     return bad
 
 
@@ -538,12 +536,27 @@ def test_pipeline_judges_inside_the_parse_batch(spark, invoice_pdf_dir):
 
     df = process_documents(pdf_pipeline(spark, invoice_pdf_dir))
     assert _pipeline_python_violations(df) == []
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython [_doc(_extract(" in plan
+    assert plan.count("_extract(") == 1  # decoded once: fields pass through _doc
     assert {r["route"] for r in df.collect()} == {"processamento_normal", "auditoria_fiscal"}
 
 
+def test_python_node_rule_rejects_a_jvm_project_between_the_udfs(spark, invoice_pdf_dir):
+    """Negative case: any transformation of pdf_pipeline's output (here a
+    no-op select) puts a JVM Project between extraction and the document
+    UDF, which then cannot chain."""
+    from rpa_etl_spark.pipeline import process_documents
+    from rpa_etl_spark.sources.pdf import pdf_pipeline
+
+    df = process_documents(pdf_pipeline(spark, invoice_pdf_dir).select("*"))
+    assert _pipeline_python_violations(df) == ["ArrowEvalPython x2"]
+
+
 def test_python_node_rule_rejects_column_judge_above_parse(spark, invoice_pdf_dir):
-    """Negative case: the Column validate/score/route chain over the parse
-    kernel's output (the pipeline's earlier shape) fails the lambda rule."""
+    """Negative case: the Column normalize and validate/score/route chains
+    around the parse kernel (the pipeline's earlier shapes) fail the lambda
+    rule, and split the Python work over two nodes."""
     from rpa_etl_spark.functions.parsing_arrow import parse_invoices_arrow
     from rpa_etl_spark.functions.text import normalize_text
     from rpa_etl_spark.sources.pdf import pdf_pipeline
@@ -553,4 +566,5 @@ def test_python_node_rule_rejects_column_judge_above_parse(spark, invoice_pdf_di
         "normalized_text", normalize_text(F.col("text")))
     bad = _pipeline_python_violations(
         column_judge(parse_invoices_arrow(df, text_col="normalized_text")))
-    assert bad and all(b.startswith("lambda above") for b in bad), bad
+    assert "ArrowEvalPython x2" in bad
+    assert any(b.startswith("lambda in Project") for b in bad), bad

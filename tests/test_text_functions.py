@@ -106,20 +106,23 @@ def _reference_normalize(text: str) -> str:
     return "\n".join(out)
 
 
+REFERENCE_RAW = (
+    "NOTA FISCAL DE SERVIÇOS\xa0ELETRÔNICA\r\n"
+    "NF\nIE\nIM\nCPF\nRG\nN\nNº\nCEP\nUF\nSP\nab\n"
+    "Valor Total:  R$ 1 . 500 , 00\n"
+    "Aliquota: 3.14\n"
+    "EMISSÃO: 15/12/202410:30:00\n"
+    "CNPJ: 04 252 011 000110\n"
+    "Linha duplicada\nLinha duplicada\n"
+    "​xy\n\n\n\nfim de documento"
+)
+
+
 def test_normalize_text_reference_parity(spark):
     """Golden-fixture parity: the Spark chain must match the reference
     semantics byte-for-byte on a crafted raw string covering P1-P7,
     including the round-1/2 divergences (P4 polarity, P6 whitelist)."""
-    raw = (
-        "NOTA FISCAL DE SERVIÇOS\xa0ELETRÔNICA\r\n"
-        "NF\nIE\nIM\nCPF\nRG\nN\nNº\nCEP\nUF\nSP\nab\n"
-        "Valor Total:  R$ 1 . 500 , 00\n"
-        "Aliquota: 3.14\n"
-        "EMISSÃO: 15/12/202410:30:00\n"
-        "CNPJ: 04 252 011 000110\n"
-        "Linha duplicada\nLinha duplicada\n"
-        "​xy\n\n\n\nfim de documento"
-    )
+    raw = REFERENCE_RAW
     assert _run(spark, T.normalize_text, raw) == _reference_normalize(raw)
     # spot-check the two previously-divergent behaviors directly
     out_lines = _run(spark, T.normalize_text, raw).split("\n")
@@ -141,3 +144,66 @@ def test_clean_party_name_stoplist(spark):
     fn = lambda c: T.clean_party_name(c, stop)  # noqa: E731
     assert _run(spark, fn, "  Empresa  Alfa Ltda. ") == "EMPRESA ALFA LTDA"
     assert _run(spark, fn, "CNPJ LTDA") is None  # all tokens boilerplate
+
+
+# Inputs on which the Python normalize twin (parsing_arrow._normalize) must
+# equal the Column chain. The first four pin the Java semantics a port gets
+# wrong (module docstring of functions/parsing_arrow.py), with the output
+# the JVM gives.
+JAVA_SEMANTICS = {
+    "abc\x0bdef": "abc def",  # text.py's whitespace class holds a literal VT
+    "NOTA 123 \x85": "NOTA 123\x85",  # $ matches before a final terminator
+    "1.500é": "1.500é",  # JDK 17 \b: a letter is a word character ...
+    "1.500\u0301": "1.500\u0301",  # ... so is a non-spacing mark ...
+    "1.500²": "1500²",  # ... but not a superscript digit
+}
+TWIN_CASES = [
+    *JAVA_SEMANTICS,
+    "NOTA 123 \u2028", "NOTA 123 \u2029", "x \x85 y \x85",
+    "Val\xa0or \u200bX\r\nY", "a\r\r\n b \r",
+    "R$ ١.٢٣٤,٥٦\n٠١/٠٢/٢٠٢٤",  # Arabic-Indic digits are not Java \d
+    "sp\nNf\nCpf\nxy\nab\nſp", "7.123_ 8.123ः",
+    "linha 1\nlinha 1\n  linha 1  \nX\n\n\n\nlinha 1 ",
+    "", "   \t  ", "\n\n\n", None, REFERENCE_RAW,
+]
+
+
+def _naive_normalize(text: str) -> str:
+    """The Column chain's patterns pasted into Python's re (ASCII mode):
+    what the twin must not be."""
+    import re
+
+    c = text.replace("\xa0", " ").replace("\u200b", "").replace("\r\n", "\n")
+    for pat, rep in [("[ \t\f]+", " "), ("\n{2,}", "\n\n"), (r"^\s+|\s+$", ""),
+                     (r"(?<=\d)\s+(?=\d)", ""),
+                     (r"(\d{2}/\d{2}/\d{4})(\d{2}:\d{2}:\d{2})", r"\1 \2"),
+                     (r"(\d)\s*,\s*(\d{2})", r"\1,\2"), (r"(?<=\d)\s*\.\s*(?=\d{3}\b)", "")]:
+        c = re.sub(pat, rep, c, flags=re.ASCII)
+    lines = [ln.strip(" ") for ln in c.split("\n")]
+    keep = [ln for ln in lines
+            if ln.upper() in T.KEEP_SHORT_TOKENS or len(ln) >= 3 or re.search(r"\d", ln, re.ASCII)]
+    return "\n".join(dict.fromkeys(keep))
+
+
+def test_python_normalize_twin_matches_the_column_chain(spark, sf_dir):
+    from rpa_etl_spark.functions.parsing_arrow import _normalize
+    from rpa_etl_spark.plans.document_queries import build_invoice_corpus
+    from tests.test_parsing import GOLDEN
+
+    corpus = [r["text"] for r in build_invoice_corpus(spark, sf_dir).select("text").collect()]
+    values = [*TWIN_CASES, GOLDEN, *corpus]
+    df = spark.createDataFrame(list(enumerate(values)), "i int, s string")
+    jvm = [r["out"] for r in sorted(
+        df.select("i", T.normalize_text(F.col("s")).alias("out")).collect())]
+    assert len(corpus) > 100
+    for value, want in zip(values, jvm):
+        assert _normalize(value) == want, repr(value)
+    for value, want in JAVA_SEMANTICS.items():
+        assert _normalize(value) == want
+
+
+def test_naive_normalize_port_diverges_on_java_semantics():
+    """Negative case: the first three JAVA_SEMANTICS inputs each catch a
+    naive port, so the parity test above can fail."""
+    cases = list(JAVA_SEMANTICS.items())[:3]
+    assert [_naive_normalize(v) == want for v, want in cases] == [False] * 3
